@@ -81,8 +81,9 @@ def _fanout_width(spark: SparkSession, path: str) -> int:
     it (token explode, span hashing, partial aggregation — the
     dominant cost of the text/dedup queries) runs on one core while
     the other 31 idle. When the achievable split count is below the
-    session's defaultParallelism, fan rows out round-robin right after
-    the scan: Catalyst pushes filters and column pruning THROUGH a
+    session's defaultParallelism, fan rows out right after the scan by
+    hash-repartitioning on the table's id column (``_FANOUT_KEYS``):
+    Catalyst pushes filters and column pruning THROUGH a
     Repartition, so pruned scans stay pruned and the exchange carries
     only the needed columns of the (small, otherwise-unsplittable)
     file. On a real warehouse layout (row groups >> cores) the guard

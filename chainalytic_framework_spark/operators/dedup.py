@@ -165,10 +165,12 @@ def minhash_similarity(sigs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 def ngram_jaccard_pairs(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id",
                         sh_hashes: DataFrame | None = None) -> DataFrame:
-    """Exact Jaccard verification of candidate pairs (shingle sets).
-    The intersection joins on the 64-bit shingle hash (never the
-    string — guide §2.3 shuffle-fewer-bytes; dup_span_stats hash
-    convention); pass a persisted :func:`shingle_hashes` frame to
+    """Jaccard verification of candidate pairs (shingle sets), exact
+    up to 64-bit hash collisions: the intersection joins on the
+    xxhash64 shingle hash (never the string — guide §2.3
+    shuffle-fewer-bytes; dup_span_stats hash convention), so a
+    collision can only inflate n_inter, with odds ~n²/2⁶⁴ for n
+    distinct shingles; pass a persisted :func:`shingle_hashes` frame to
     share one shingle explode across signatures/verify/sizes."""
     sh = (shingle_hashes(docs, text_col, id_col)
           if sh_hashes is None else sh_hashes)

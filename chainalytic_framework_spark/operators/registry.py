@@ -141,6 +141,34 @@ def rollup_with_spec(
     )
 
 
+def _agg_clustered(df: DataFrame, ms: MetricSet, time_col: str, tier_name: str,
+                   n_parts: int, keys: list, key_names: list[str], aggs: list) -> DataFrame:
+    """Shared body of :func:`rollup_with_spec_clustered` and
+    :func:`downsample_with_spec_clustered`: ``keys`` are the grouping
+    keys after the leading (bucket_day, _wb, bucket_start), and
+    ``key_names`` their output names."""
+    from .bucketing import url_bucket
+
+    pre = (
+        df.withColumn("bucket_start", bucket_start(time_col, tier_name))
+        .withColumn("bucket_day", F.to_date("bucket_start"))
+        .withColumn("_wb", F.pmod(F.col("url_hash"), F.lit(n_parts)).cast("int"))
+        .repartition(n_parts, F.col("bucket_day"), F.col("_wb"))
+    )
+    out = (
+        pre.groupBy("bucket_day", "_wb", F.col("bucket_start"), *keys)
+        .agg(*aggs)
+        .withColumn("tier", F.lit(tier_name))
+        .withColumn("gap_filled", F.lit(False))
+        .withColumn("url_bucket", url_bucket("url"))
+        .sortWithinPartitions("bucket_day", "url_hash")
+    )
+    return out.select(
+        "bucket_start", *key_names, *ms.metric_names(),
+        "tier", "gap_filled", "bucket_day", "url_bucket",
+    )
+
+
 def rollup_with_spec_clustered(
     df: DataFrame,
     ms: MetricSet,
@@ -148,7 +176,6 @@ def rollup_with_spec_clustered(
     n_parts: int,
     time_col: str = "warc_ts",
     keys: tuple[str, ...] = ("url_hash", "url", "lang"),
-    n_secondary_groups: int | None = None,
 ) -> DataFrame:
     """Finest-tier rollup whose ONE exchange is ALREADY the write
     layout (optimization r06): source rows are hash-repartitioned on
@@ -162,35 +189,14 @@ def rollup_with_spec_clustered(
     rows, and the local sort restores row-group min/max clustering.
     Output columns and values match
     ``with_layout_columns(rollup_with_spec(...))`` exactly (order
-    included). Requires ``url_hash`` in ``df``; callers fall back to
-    the unfused pair otherwise."""
-    from .bucketing import url_bucket
-
-    groups = n_secondary_groups or n_parts
-    pre = (
-        df.withColumn("bucket_start", bucket_start(time_col, tier_name))
-        .withColumn("bucket_day", F.to_date("bucket_start"))
-        .withColumn("_wb", F.pmod(F.col("url_hash"), F.lit(groups)).cast("int"))
-        .repartition(n_parts, F.col("bucket_day"), F.col("_wb"))
-    )
+    included). Requires ``url_hash`` and ``url`` in ``df``."""
     present = [k for k in keys if k in df.columns]
     derived = [f().alias(n) for n, f in ms.derived_keys]
-    out = (
-        pre.groupBy("bucket_day", "_wb", F.col("bucket_start"), *present, *derived)
-        .agg(*[m.agg().alias(m.name) for m in ms.metrics])
-        .withColumn("tier", F.lit(tier_name))
-        .withColumn("gap_filled", F.lit(False))
-        .withColumn("url_bucket", url_bucket("url"))
-        .sortWithinPartitions("bucket_day", "url_hash")
+    return _agg_clustered(
+        df, ms, time_col, tier_name, n_parts,
+        present + derived, present + [n for n, _ in ms.derived_keys],
+        [m.agg().alias(m.name) for m in ms.metrics],
     )
-    ordered = (
-        ["bucket_start"]
-        + present
-        + [n for n, _ in ms.derived_keys]
-        + ms.metric_names()
-        + ["tier", "gap_filled", "bucket_day", "url_bucket"]
-    )
-    return out.select(*ordered)
 
 
 def downsample_with_spec_clustered(
@@ -199,44 +205,21 @@ def downsample_with_spec_clustered(
     child_tier_name: str,
     n_parts: int,
     keys: tuple[str, ...] = ("url_hash", "url", "lang"),
-    n_secondary_groups: int | None = None,
 ) -> DataFrame:
     """Downsample whose ONE exchange is already the child tier's write
     layout — the cascade-child analogue of
     :func:`rollup_with_spec_clustered` (same leading-key trick, same
     exact-output contract vs ``with_layout_columns(downsample_with_spec
     (...))``). Requires url_hash/url in the parent grain."""
-    from .bucketing import url_bucket
-
     src = parent_tier_df
     if "gap_filled" in src.columns:
         src = src.where(~F.col("gap_filled"))
-    groups = n_secondary_groups or n_parts
-    pre = (
-        src.withColumn(
-            "bucket_start", bucket_start("bucket_start", child_tier_name)
-        )
-        .withColumn("bucket_day", F.to_date("bucket_start"))
-        .withColumn("_wb", F.pmod(F.col("url_hash"), F.lit(groups)).cast("int"))
-        .repartition(n_parts, F.col("bucket_day"), F.col("_wb"))
-    )
     present = [k for k in list(keys) + [n for n, _ in ms.derived_keys]
                if k in src.columns]
-    out = (
-        pre.groupBy("bucket_day", "_wb", F.col("bucket_start"), *present)
-        .agg(*[m.reagg().alias(m.name) for m in ms.metrics])
-        .withColumn("tier", F.lit(child_tier_name))
-        .withColumn("gap_filled", F.lit(False))
-        .withColumn("url_bucket", url_bucket("url"))
-        .sortWithinPartitions("bucket_day", "url_hash")
+    return _agg_clustered(
+        src, ms, "bucket_start", child_tier_name, n_parts, present, present,
+        [m.reagg().alias(m.name) for m in ms.metrics],
     )
-    ordered = (
-        ["bucket_start"]
-        + present
-        + ms.metric_names()
-        + ["tier", "gap_filled", "bucket_day", "url_bucket"]
-    )
-    return out.select(*ordered)
 
 
 def downsample_with_spec(

@@ -2,8 +2,8 @@
 multi-dimensional data skipping for the tier tables.
 
 The problem: tier tables are partitioned by day (the dominant query
-axis) and range-clustered by url_bucket INSIDE each day
-(tables.py::cluster_for_write). That layout prunes time predicates
+axis) and hash-clustered by url_hash INSIDE each day
+(tables.py::cluster_for_write_hash). That layout prunes time predicates
 perfectly, but a url-only predicate ("this domain's series across all
 history") must open every file of every day: a 1-D sort order can only
 skip on its leading dimension. The classic fix (Databricks OPTIMIZE

@@ -27,9 +27,11 @@ to the pending days; nothing loops per-bucket on the driver.
 
 from __future__ import annotations
 
+import calendar
 import datetime as dt
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,13 +42,15 @@ from ..operators.fold import (
     fold_with_state,
     prepare_observations,
 )
-from ..operators.registry import downsample_with_spec, get_metric_set, rollup_with_spec
-from ..operators.rollup import with_layout_columns
+from ..operators.registry import (
+    downsample_with_spec_clustered,
+    get_metric_set,
+    rollup_with_spec_clustered,
+)
 from ..tables import TableStore
 from .checkpoint import append_entries, committed_days
 
-TIER_TABLE = "tier_{name}"          # default metric set
-TIER_TABLE_NS = "tier_{ms}_{name}"  # non-default sets get their own tables
+COLD_TIER = "1d"  # the tier the optional cold-store blobs encode
 STATE_TABLE = "fold_state"
 FOLD_TABLE = "fold_events"
 
@@ -61,16 +65,18 @@ import os as _os
 N_STATE_BUCKETS = int(_os.environ.get("SPARK_GRAFT_STATE_BUCKETS", "64"))
 
 
-def _tier_table(name: str, metric_set: str = "default") -> str:
-    """Tier table name, NAMESPACED by metric set: two sets have
+def _tier_family(metric_set: str) -> str:
+    """Tier table prefix, NAMESPACED by metric set: two sets have
     different column sets, and dynamic partition overwrite into a
     shared path would leave a table whose partitions disagree on
     schema (parquet infers from one footer — later reads fail or
-    silently null). The default set keeps the bare name for
+    silently null). The default set keeps the bare ``tier`` prefix for
     compatibility with the query layer and stored warehouses."""
-    if metric_set == "default":
-        return TIER_TABLE.format(name=name)
-    return TIER_TABLE_NS.format(ms=metric_set, name=name)
+    return "tier" if metric_set == "default" else f"tier_{metric_set}"
+
+
+def _tier_table(name: str, metric_set: str = "default") -> str:
+    return f"{_tier_family(metric_set)}_{name}"
 
 
 def pending_days(spark: SparkSession, pages: DataFrame, store: TableStore,
@@ -104,17 +110,25 @@ def pending_days(spark: SparkSession, pages: DataFrame, store: TableStore,
     return [d for d in all_days if d not in done]
 
 
+def _child_window(pend: list, csecs: int) -> tuple[int, int]:
+    """[lo, hi) of the multi-day child windows covering the pending
+    days, in UTC epochs, never driver-local time. Callers compare in
+    EPOCH space: a naive-datetime literal is interpreted in the
+    driver's LOCAL timezone by TimestampType.toInternal, which on a
+    non-UTC driver shifts the window and silently drops edge parent
+    rows."""
+    starts = [(calendar.timegm(d.timetuple()) // csecs) * csecs for d in pend]
+    return min(starts), max(starts) + csecs
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     store: TableStore,
-    grain: str = "url",
     metric_set: str = "default",
     input_snapshot_id: str = "",
     with_fold: bool = True,
-    persist_observations: bool = True,
     with_cold_tier: bool = False,
-    cold_source_tier: str = "1d",
     with_sketches: bool = False,
     with_histograms: bool = False,
     enforce_retention_now=None,
@@ -128,171 +142,109 @@ def run_pipeline(
 
     psel = pages.where(F.to_date("warc_ts").isin(pend))
     entries = []
+    n_parts = spark.sparkContext.defaultParallelism
 
     # ---- ONE raw scan: narrow pages to observations (blobs → lengths
     # in the scan projection), persist; both the 1m tier and the fold
     # read this. At 10^12 docs persist() spills to local disk — still
     # far cheaper than a second pass over the html column.
-    obs = prepare_observations(psel)
-    if persist_observations:
-        from pyspark import StorageLevel
-
-        # NOTE (r06, measured and rejected): persisting this frame
-        # repartition(url) makes HashPartitioning(url) satisfy both the
-        # fold window's and the finest rollup's required distributions
-        # (0 exchanges above the cache scan, verified), but the bench
-        # got SLOWER — the saved exchanges ran inside the CONCURRENT
-        # chains where they overlap, while the url repartition pays on
-        # the serial materialization path before any chain starts.
-        obs = obs.persist(StorageLevel.MEMORY_AND_DISK)
-        # materialize ONCE before the concurrent chains launch: without
-        # this, the tier chain and the fold chain would race to compute
-        # the same cached partitions and duplicate the raw html scan —
-        # the single most expensive pass of the whole run
-        obs.count()
+    # NOTE (r06, measured and rejected): persisting this frame
+    # repartition(url) makes HashPartitioning(url) satisfy both the
+    # fold window's and the finest rollup's required distributions
+    # (0 exchanges above the cache scan, verified), but the bench
+    # got SLOWER — the saved exchanges ran inside the CONCURRENT
+    # chains where they overlap, while the url repartition pays on
+    # the serial materialization path before any chain starts.
+    obs = prepare_observations(psel).persist(StorageLevel.MEMORY_AND_DISK)
+    # materialize ONCE before the concurrent chains launch: without
+    # this, the tier chain and the fold chain would race to compute
+    # the same cached partitions and duplicate the raw html scan —
+    # the single most expensive pass of the whole run
+    obs.count()
 
     # n_in (input docs) is produced inside the tier chain (Σ point_count
-    # of the written 1m rows — no second raw scan); concurrent chains
-    # stamp a placeholder and the join point below fills it in.
+    # of the written 1m rows — no second raw scan); every manifest row
+    # gets it at the join point below, when all chains are done.
     n_in = 0
 
-    def _cold_chain():
-        ents = []
-        # ---- optional: cold-tier blobs for the coarse tier ----
+    def _entry(tier: str, wall: float, day=None, rows_out: int = 0) -> dict:
+        """Manifest row for ``day``, or for the whole pending range."""
+        start = dt.datetime.combine(day or pend[0], dt.time())
+        end = dt.datetime.combine(day or pend[-1], dt.time()) + dt.timedelta(days=1)
+        return dict(tier=tier, bucket_range_start=start, bucket_range_end=end,
+                    input_snapshot_id=input_snapshot_id, rows_out=rows_out,
+                    wall_seconds=wall)
+
+    def _cascade(family: str, finest_df: DataFrame, epoch, derive) -> dict:
+        """Commit ``finest_df`` to ``<family>_<finest>``, then re-derive
+        each coarser tier's affected partitions FROM THE STORED parent
+        table (continuous-aggregate maintenance). A child whose buckets
+        fit inside single days reads the parent's pending days; a
+        multi-day child (30d windows reach beyond the pending days)
+        reads the parent rows of every child window covering them,
+        pruned on the family's ``epoch`` column — otherwise every
+        incremental run would re-derive the ENTIRE history and rewrite
+        every coarse partition. ``derive(parent_rows, child)`` builds
+        the child frame. Returns each tier's wall seconds."""
         t0 = time.perf_counter()
-        from ..operators.cold_store import encode_cold
+        store.overwrite_partitions(finest_df, f"{family}_{finest}", ["bucket_day"])
+        walls = {finest: time.perf_counter() - t0}
+        for child, parent in ms.cascade_pairs():
+            t0 = time.perf_counter()
+            csecs = SECONDS[child]
+            src = store.read(f"{family}_{parent}")
+            if csecs <= 86400:
+                src = src.where(F.col("bucket_day").isin(pend))
+            else:
+                lo_e, hi_e = _child_window(pend, csecs)
+                src = src.where((epoch >= F.lit(lo_e)) & (epoch < F.lit(hi_e)))
+            out = derive(src.drop("bucket_day", "url_bucket"), child)
+            store.overwrite_partitions(out, f"{family}_{child}", ["bucket_day"])
+            walls[child] = time.perf_counter() - t0
+        return walls
 
-        cold = encode_cold(store.read(_tier_table(cold_source_tier, ms.name)))
-        store.write(cold, f"cold_{cold_source_tier}")
-        ents.append(
-            dict(tier=f"cold_{cold_source_tier}",
-                 bucket_range_start=dt.datetime.combine(pend[0], dt.time()),
-                 bucket_range_end=dt.datetime.combine(pend[-1], dt.time()) + dt.timedelta(days=1),
-                 input_snapshot_id=input_snapshot_id, rows_in=-1, rows_out=0,
-                 wall_seconds=time.perf_counter() - t0, docs_per_sec=0.0)
-        )
-
-        return ents
-
-    def _cascade_chain():
+    def _tier_chain():
         # ---- finest tier + downsample cascade + cold tier ----
+        # FUSED rollup+layout+clustering (r06): repartition the SOURCE
+        # rows on (bucket_day, url_hash group) and lead the grouping key
+        # with those columns — the aggregate's distribution is then
+        # already satisfied AND already the write layout, so each tier
+        # pays one exchange where the round-5 plan paid two (agg
+        # shuffle + cluster shuffle).
         nonlocal n_in
-        ents = []
-        t0 = time.perf_counter()
-        if "url_hash" in obs.columns and "url" in obs.columns:
-            # FUSED rollup+layout+clustering (r06): repartition the
-            # SOURCE rows on (bucket_day, url_hash group) and lead the
-            # grouping key with those columns — the aggregate's
-            # distribution is then already satisfied AND already the
-            # write layout, so the chain pays one exchange where the
-            # round-5 plan paid two (agg shuffle + cluster shuffle).
-            from ..operators.registry import rollup_with_spec_clustered
-
-            m1 = rollup_with_spec_clustered(
-                obs, ms, finest, spark.sparkContext.defaultParallelism
-            )
-        else:
-            m1 = with_layout_columns(rollup_with_spec(obs, ms, finest))
-            # hash clustering, not range: repartitionByRange runs a
-            # sampling job that re-executes the rollup (even off
-            # persisted obs it is a second full aggregation); hash gets
-            # bounded files + local url_hash clustering with ONE shuffle
-            # (same switch that bought the fold commit +25-46% in r2)
-            m1 = store.cluster_for_write_hash(m1, ["bucket_day"])
-        # keep the clustered finest frame for the cascade + day stats:
-        # this run's written pend-day partitions ARE this frame, so
-        # single-day-grain children and the manifest agg read it from
-        # cache instead of re-scanning the just-written parquet (at
-        # scale the persist spills to local disk — same cost as the
-        # read-back it replaces, minus the commit round-trip)
-        from pyspark import StorageLevel
-
-        m1 = m1.persist(StorageLevel.MEMORY_AND_DISK)
-        store.overwrite_partitions(m1, _tier_table(finest, ms.name), ["bucket_day"])
-        wall = time.perf_counter() - t0
+        # persisted so the per-day stats below reuse the written rows
+        # instead of re-running the rollup
+        m1 = rollup_with_spec_clustered(obs, ms, finest, n_parts).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        walls = _cascade(
+            _tier_family(ms.name), m1, F.col("bucket_start").cast("long"),
+            lambda src, child: downsample_with_spec_clustered(src, ms, child, n_parts),
+        )
         # one manifest row PER DAY — the resume anti-join's work unit.
         day_stats = (
             m1.groupBy("bucket_day")
             .agg(F.count(F.lit(1)).alias("rows_out"), F.sum("point_count").alias("docs"))
             .collect()
         )
+        m1.unpersist()
         day_counts = {r["bucket_day"]: r["rows_out"] for r in day_stats}
         n_in = int(sum(r["docs"] for r in day_stats))
-        for d in pend:
-            ents.append(
-                dict(tier=finest, bucket_range_start=dt.datetime.combine(d, dt.time()),
-                     bucket_range_end=dt.datetime.combine(d, dt.time()) + dt.timedelta(days=1),
-                     input_snapshot_id=input_snapshot_id, rows_in=n_in,
-                     rows_out=int(day_counts.get(d, 0)),
-                     wall_seconds=wall, docs_per_sec=n_in / wall if wall > 0 else 0.0)
-            )
+        wall = walls.pop(finest)
+        ents = [_entry(finest, wall, d, int(day_counts.get(d, 0))) for d in pend]
+        ents += [_entry(child, wall) for child, wall in walls.items()]
 
-        # each scheduled coarser tier derives from its parent; a child
-        # whose buckets fit inside single days reads the parent rows this
-        # run just wrote — still cached — while multi-day children
-        # (30d windows reach beyond the pending days) read the STORED
-        # parent table for history outside the run's window
-        mem_parents = {finest: m1}
-        cached = [m1]
-        for child, parent in ms.cascade_pairs():
-            t0 = time.perf_counter()
-            csecs = SECONDS[child]
-            if csecs > 86400:
-                # child buckets span multiple days: re-derive every child
-                # window covering the pending days — all in UTC epochs
-                # (calendar.timegm), never driver-local time
-                import calendar
-
-                starts = sorted(
-                    {(calendar.timegm(d.timetuple()) // csecs) * csecs for d in pend}
-                )
-                # compare in EPOCH space: a naive-datetime literal is
-                # interpreted in the driver's LOCAL timezone by
-                # TimestampType.toInternal, which on a non-UTC driver shifts
-                # the [lo, hi) window and silently drops edge parent rows.
-                lo_e, hi_e = min(starts), max(starts) + csecs
-                src = store.read(_tier_table(parent, ms.name)).where(
-                    (F.col("bucket_start").cast("long") >= F.lit(lo_e))
-                    & (F.col("bucket_start").cast("long") < F.lit(hi_e))
-                )
-            elif parent in mem_parents:
-                src = mem_parents[parent]
-            else:
-                src = store.read(_tier_table(parent, ms.name)).where(
-                    F.col("bucket_day").isin(pend)
-                )
-            psrc = src.drop("bucket_day", "url_bucket")
-            if "url_hash" in psrc.columns and "url" in psrc.columns:
-                # fused agg+layout exchange, same as the finest tier
-                from ..operators.registry import downsample_with_spec_clustered
-
-                out = downsample_with_spec_clustered(
-                    psrc, ms, child, spark.sparkContext.defaultParallelism
-                )
-            else:
-                out = with_layout_columns(downsample_with_spec(psrc, ms, child))
-                out = store.cluster_for_write_hash(out, ["bucket_day"])
-            if csecs <= 86400:
-                out = out.persist(StorageLevel.MEMORY_AND_DISK)
-                cached.append(out)
-                mem_parents[child] = out
-            store.overwrite_partitions(out, _tier_table(child, ms.name), ["bucket_day"])
-            wall = time.perf_counter() - t0
-            ents.append(
-                dict(tier=child, bucket_range_start=dt.datetime.combine(pend[0], dt.time()),
-                     bucket_range_end=dt.datetime.combine(pend[-1], dt.time()) + dt.timedelta(days=1),
-                     input_snapshot_id=input_snapshot_id, rows_in=-1, rows_out=0,
-                     wall_seconds=wall, docs_per_sec=0.0)
-            )
-
-        for df in cached:
-            df.unpersist()
         if with_cold_tier:
-            ents.extend(_cold_chain())
+            # ---- optional: cold-tier blobs for the coarse tier ----
+            from ..operators.cold_store import encode_cold
+
+            t0 = time.perf_counter()
+            cold = encode_cold(store.read(_tier_table(COLD_TIER, ms.name)))
+            store.write(cold, f"cold_{COLD_TIER}")
+            ents.append(_entry(f"cold_{COLD_TIER}", time.perf_counter() - t0))
         return ents
 
     def _sketch_chain():
-        ents = []
         # ---- optional: HLL distinct-url sketch tiers ----
         # Mergeable partials (operators/sketches.py): the finest sketch tier
         # reads the persisted obs (urls seen once), coarser tiers union the
@@ -300,92 +252,38 @@ def run_pipeline(
         # re-shuffling the url key space.
         from ..operators.sketches import url_sketch_downsample, url_sketch_rollup
 
+        def with_day(df):
+            return df.withColumn("bucket_day", F.to_date("bucket_start"))
+
         t0 = time.perf_counter()
-        sk = url_sketch_rollup(obs, finest).withColumn(
-            "bucket_day", F.to_date("bucket_start")
+        _cascade(
+            "sketch", with_day(url_sketch_rollup(obs, finest)),
+            F.col("bucket_start").cast("long"),
+            lambda src, child: with_day(url_sketch_downsample(src, child)),
         )
-        store.overwrite_partitions(sk, f"sketch_{finest}", ["bucket_day"])
-        for child, parent in ms.cascade_pairs():
-            pdf = store.read(f"sketch_{parent}")
-            csecs = SECONDS[child]
-            if csecs <= 86400:
-                pdf = pdf.where(F.col("bucket_day").isin(pend))
-            else:
-                # same epoch-window pruning as the numeric cascade: only
-                # parent sketches inside the affected child windows —
-                # otherwise every incremental run re-unions the ENTIRE
-                # sketch history and rewrites every coarse partition
-                import calendar
-
-                starts = sorted(
-                    {(calendar.timegm(d.timetuple()) // csecs) * csecs for d in pend}
-                )
-                lo_e, hi_e = min(starts), max(starts) + csecs
-                pdf = pdf.where(
-                    (F.col("bucket_start").cast("long") >= F.lit(lo_e))
-                    & (F.col("bucket_start").cast("long") < F.lit(hi_e))
-                )
-            out = url_sketch_downsample(pdf.drop("bucket_day"), child).withColumn(
-                "bucket_day", F.to_date("bucket_start")
-            )
-            store.overwrite_partitions(out, f"sketch_{child}", ["bucket_day"])
-        ents.append(
-            dict(tier="sketches", bucket_range_start=dt.datetime.combine(pend[0], dt.time()),
-                 bucket_range_end=dt.datetime.combine(pend[-1], dt.time()) + dt.timedelta(days=1),
-                 input_snapshot_id=input_snapshot_id, rows_in=-1, rows_out=0,
-                 wall_seconds=time.perf_counter() - t0, docs_per_sec=0.0)
-        )
-
-        return ents
+        return [_entry("sketches", time.perf_counter() - t0)]
 
     def _hist_chain():
-        ents = []
         # ---- optional: text-length histogram tiers ----
         # Distribution partials (operators/histogram.py): data-independent
         # leading-decimal-digit buckets, so coarser tiers merge stored child
-        # counts losslessly — quantile dashboards never touch raw. Same
-        # incremental cascade pruning as the numeric/sketch tiers.
+        # counts losslessly — quantile dashboards never touch raw.
         from ..operators.histogram import histogram_downsample, histogram_rollup
+
+        def with_day(df):
+            return df.withColumn("bucket_day", F.to_date(F.col("bucket_epoch").cast("timestamp")))
 
         t0 = time.perf_counter()
         fsecs = SECONDS[finest]
         be = (F.col("warc_ts").cast("long") / fsecs).cast("long") * fsecs
-        h = histogram_rollup(obs, be, ["lang"], F.col("text_len")).withColumn(
-            "bucket_day", F.to_date(F.col("bucket_epoch").cast("timestamp"))
+        _cascade(
+            "hist", with_day(histogram_rollup(obs, be, ["lang"], F.col("text_len"))),
+            F.col("bucket_epoch"),
+            lambda src, child: with_day(histogram_downsample(src, ["lang"], SECONDS[child])),
         )
-        store.overwrite_partitions(h, f"hist_{finest}", ["bucket_day"])
-        for child, parent in ms.cascade_pairs():
-            pdf = store.read(f"hist_{parent}")
-            csecs = SECONDS[child]
-            if csecs <= 86400:
-                pdf = pdf.where(F.col("bucket_day").isin(pend))
-            else:
-                import calendar
-
-                starts = sorted(
-                    {(calendar.timegm(d.timetuple()) // csecs) * csecs for d in pend}
-                )
-                lo_e, hi_e = min(starts), max(starts) + csecs
-                pdf = pdf.where(
-                    (F.col("bucket_epoch") >= F.lit(lo_e))
-                    & (F.col("bucket_epoch") < F.lit(hi_e))
-                )
-            out = histogram_downsample(pdf.drop("bucket_day"), ["lang"], csecs).withColumn(
-                "bucket_day", F.to_date(F.col("bucket_epoch").cast("timestamp"))
-            )
-            store.overwrite_partitions(out, f"hist_{child}", ["bucket_day"])
-        ents.append(
-            dict(tier="histograms",
-                 bucket_range_start=dt.datetime.combine(pend[0], dt.time()),
-                 bucket_range_end=dt.datetime.combine(pend[-1], dt.time()) + dt.timedelta(days=1),
-                 input_snapshot_id=input_snapshot_id, rows_in=-1, rows_out=0,
-                 wall_seconds=time.perf_counter() - t0, docs_per_sec=0.0)
-        )
-
-        return ents
+        return [_entry("histograms", time.perf_counter() - t0)]
 
     def _fold_chain():
-        ents = []
         # ---- stateful fold: change-event stream + state table ----
         # The fold runs ONCE: its per-observation change events (is_new /
         # text_changed / gap / expiry) are committed to FOLD_TABLE first
@@ -410,8 +308,6 @@ def run_pipeline(
             # urls' fold rows, day partitions, and state buckets are
             # never read or rewritten. The previous design re-folded the
             # ENTIRE raw history on any backfill.
-            from pyspark import StorageLevel
-
             touched = obs.select("url").distinct()
             hist = prepare_observations(pages).join(touched, "url", "left_semi")
             restated = fold_observations(hist).withColumn(
@@ -435,8 +331,6 @@ def run_pipeline(
                 fold_out = fold_with_state(obs, state)
             else:
                 fold_out = fold_observations(obs)
-            from pyspark import StorageLevel
-
             # persist the fold at the WINDOW's url partitioning (r06):
             # the day-clustered table write re-shuffles anyway, but the
             # state delta's groupBy(url, url_hash) is satisfied by the
@@ -458,18 +352,9 @@ def run_pipeline(
             store.merge_upsert(delta_state, STATE_TABLE, key="url",
                                partition_col="state_bucket")
             fold_out.unpersist()
-        wall = time.perf_counter() - t0
-        ents.append(
-            dict(tier="fold", bucket_range_start=dt.datetime.combine(pend[0], dt.time()),
-                 bucket_range_end=dt.datetime.combine(pend[-1], dt.time()) + dt.timedelta(days=1),
-                 input_snapshot_id=input_snapshot_id, rows_in=-1, rows_out=0,
-                 wall_seconds=wall, docs_per_sec=0.0)
-        )
-
-        return ents
+        return [_entry("fold", time.perf_counter() - t0)]
 
     def _user_fold_chain():
-        ents = []
         # ---- user metric-set fold (the registry's Transform hook) ----
         # Contract: ms.fold(obs) returns a DataFrame carrying warc_ts; the
         # pipeline derives bucket_day and commits it with the same
@@ -480,15 +365,7 @@ def run_pipeline(
             store.cluster_for_write_hash(user_out, ["bucket_day"]),
             f"fold_{ms.name}", ["bucket_day"],
         )
-        ents.append(
-            dict(tier=f"fold_{ms.name}",
-                 bucket_range_start=dt.datetime.combine(pend[0], dt.time()),
-                 bucket_range_end=dt.datetime.combine(pend[-1], dt.time()) + dt.timedelta(days=1),
-                 input_snapshot_id=input_snapshot_id, rows_in=-1, rows_out=0,
-                 wall_seconds=time.perf_counter() - t0, docs_per_sec=0.0)
-        )
-
-        return ents
+        return [_entry(f"fold_{ms.name}", time.perf_counter() - t0)]
 
     # ---- independent chains run CONCURRENTLY ----
     # After the finest tier commits, the numeric cascade (+cold tier),
@@ -499,7 +376,7 @@ def run_pipeline(
     # max-of-chains. Within a chain, commit order (and therefore resume
     # semantics) is unchanged; parquet dynamic overwrite uses per-write
     # options, so threads share no session conf.
-    chains = [_cascade_chain]
+    chains = [_tier_chain]
     if with_sketches:
         chains.append(_sketch_chain)
     if with_histograms:
@@ -530,11 +407,7 @@ def run_pipeline(
         # chains overlap only in each other's shuffle gaps, which is
         # the narrow side's best case.
         sc = spark.sparkContext
-        import os as _os
-
-        _pool_env = _os.environ.get("SPARK_GRAFT_CHAIN_POOLS")
-        use_pools = (sc.defaultParallelism >= 16 if _pool_env is None
-                     else _pool_env == "1")
+        use_pools = sc.defaultParallelism >= 16
 
         def _in_pool(fn):
             def run():
@@ -551,14 +424,12 @@ def run_pipeline(
             for fut in [ex.submit(_in_pool(c)) for c in chains]:
                 entries.extend(fut.result())  # re-raises chain errors
 
-    # chains that ran concurrently with the tier chain stamped a
-    # placeholder for the input-doc count; fill it now that the tier
-    # chain's day_stats committed n_in
+    # the input-doc count exists only once the tier chain's day_stats
+    # ran; chains that ran concurrently with it could not know it
     for e in entries:
-        if e["rows_in"] == -1:
-            e["rows_in"] = n_in
-            w = e["wall_seconds"]
-            e["docs_per_sec"] = n_in / w if w > 0 else 0.0
+        w = e["wall_seconds"]
+        e["rows_in"] = n_in
+        e["docs_per_sec"] = n_in / w if w > 0 else 0.0
 
     # ---- optional: retention enforcement (after coarser covers commit) ----
     if enforce_retention_now is not None:
@@ -586,8 +457,7 @@ def run_pipeline(
                 parent_committed_max=pmax, parent_name=cov,
             )
 
-    if persist_observations:
-        obs.unpersist()
+    obs.unpersist()
     append_entries(spark, store, entries)
     total = time.perf_counter() - t_run
     return {

@@ -270,41 +270,26 @@ class TableStore:
             )
         return self.read(name)
 
-    def cluster_for_write(self, df: DataFrame, partition_by: list[str],
-                          secondary: str | None = "url_bucket") -> DataFrame:
-        """Range-cluster rows by (partition cols, url_bucket) before a
+    def cluster_for_write_hash(self, df: DataFrame, partition_by: list[str],
+                               secondary: str | None = "url_hash") -> DataFrame:
+        """Hash-cluster rows by (partition cols, pmod(secondary)) before a
         partitioned write. Without this, every shuffle task writes one
         file into EVERY partition dir — n_tasks × n_partitions small
-        files (1.5M/tier/year at 10^12 scale). Ranged, each task covers
-        a contiguous (day, bucket) slice: file count ≈ n_tasks, and
-        row groups are clustered for min/max pruning on url_bucket.
-        Costs one extra shuffle of tier rows (tiny vs raw input)."""
-        cols = list(partition_by)
-        if secondary and secondary in df.columns:
-            cols.append(secondary)
-        n = self.spark.sparkContext.defaultParallelism
-        return df.repartitionByRange(n, *cols)
-
-    def cluster_for_write_hash(self, df: DataFrame, partition_by: list[str],
-                               secondary: str | None = "url_hash",
-                               n_secondary_groups: int | None = None) -> DataFrame:
-        """Hash-clustered variant of ``cluster_for_write`` for EXPENSIVE
-        upstream plans: ``repartitionByRange`` runs a separate sampling
-        job that RECOMPUTES the child plan — when the child is a pandas
-        fold, that doubles the most expensive stage of the run. Hash
-        repartition on (partition cols, pmod(secondary)) does one
-        shuffle with no sampling pass; a local sort restores row-group
-        min/max clustering on the secondary key. File count ≈
-        one per (partition value, secondary group) per task — bounded,
-        though without range's global ordering."""
+        files (1.5M/tier/year at 10^12 scale). File count ≈ one per
+        (partition value, secondary group) per task — bounded, though
+        without a range layout's global ordering; a local sort restores
+        row-group min/max clustering on the secondary key. Hash, not
+        ``repartitionByRange``: range runs a separate sampling job that
+        RECOMPUTES the child plan — when the child is a pandas fold,
+        that doubles the most expensive stage of the run. Costs one
+        shuffle of the written rows, with no sampling pass."""
         from pyspark.sql import functions as F
 
         n = self.spark.sparkContext.defaultParallelism
         cols = [F.col(c) for c in partition_by]
         sort_cols = list(partition_by)
         if secondary and secondary in df.columns:
-            groups = n_secondary_groups or n
-            cols.append(F.pmod(F.col(secondary), F.lit(groups)))
+            cols.append(F.pmod(F.col(secondary), F.lit(n)))
             sort_cols.append(secondary)
         return df.repartition(n, *cols).sortWithinPartitions(*sort_cols)
 

@@ -28,20 +28,26 @@ def store(spark, tmp_path):
 def test_incremental_equals_full(spark, tmp_path):
     pages = generate_pages(spark, 4000).cache()
     cut = dt.datetime(2024, 1, 4)
+    flags = dict(with_fold=False, with_sketches=True, with_histograms=True)
 
     full_store = TableStore(spark, str(tmp_path / "full"))
-    run_pipeline(spark, pages, full_store, with_fold=False)
+    run_pipeline(spark, pages, full_store, **flags)
 
     inc_store = TableStore(spark, str(tmp_path / "inc"))
-    run_pipeline(spark, pages.where(F.col("warc_ts") < F.lit(cut)), inc_store, with_fold=False)
-    r2 = run_pipeline(spark, pages, inc_store, with_fold=False)
+    run_pipeline(spark, pages.where(F.col("warc_ts") < F.lit(cut)), inc_store, **flags)
+    r2 = run_pipeline(spark, pages, inc_store, **flags)
     assert r2["pending_days"] > 0
 
+    # HLL sketches are compared by their estimate, not their bytes
+    sketch_cols = ["bucket_start", "lang", "point_count",
+                   F.hll_sketch_estimate("url_sketch").alias("est")]
     for tier in ("1m", "1h", "1d", "30d"):
-        a = full_store.read(f"tier_{tier}")
-        b = inc_store.read(f"tier_{tier}")
-        assert a.exceptAll(b).count() == 0, tier
-        assert b.exceptAll(a).count() == 0, tier
+        for table, cols in ((f"tier_{tier}", ["*"]), (f"hist_{tier}", ["*"]),
+                            (f"sketch_{tier}", sketch_cols)):
+            a = full_store.read(table).select(*cols)
+            b = inc_store.read(table).select(*cols)
+            assert a.exceptAll(b).count() == 0, table
+            assert b.exceptAll(a).count() == 0, table
 
 
 def test_rerun_is_noop(spark, store):
@@ -57,11 +63,20 @@ def test_rerun_is_noop(spark, store):
 
 def test_manifest_metrics(spark, store):
     pages = generate_pages(spark, 2000).cache()
-    run_pipeline(spark, pages, store, with_fold=False)
+    run_pipeline(spark, pages, store, with_fold=True, with_sketches=True,
+                 with_histograms=True, with_cold_tier=True)
     m = read_manifest(store).toPandas()
-    assert set(m["tier"]) == {"1m", "1h", "1d", "30d"}
+    chains = {"sketches", "histograms", "fold", "cold_1d"}
+    assert set(m["tier"]) == {"1m", "1h", "1d", "30d"} | chains
     assert (m["wall_seconds"] > 0).all()
     assert (m[m["tier"] == "1m"]["docs_per_sec"] > 0).all()
+    # chains that ran beside the tier chain get the input-doc count too
+    docs = store.read("tier_1m").agg(F.sum("point_count")).first()[0]
+    for tier in chains:
+        rows = m[m["tier"] == tier]
+        assert len(rows) == 1, tier
+        assert (rows["rows_in"] == docs).all(), tier
+        assert (rows["docs_per_sec"] > 0).all(), tier
 
 
 def test_fold_state_incremental(spark, store):
