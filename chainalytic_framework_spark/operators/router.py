@@ -13,10 +13,13 @@ never an approximation — additive measures only; quantiles route to
 the histogram/KLL tiers instead).
 
 ``route_range`` is driver-side arithmetic over epoch ints (no data
-touched); ``read_routed`` turns the segments into per-tier
-partition-pruned scans (bucket_start is the partition/cluster axis of
-every tier table) unioned into one plan, so Spark sees ordinary
-pushed-down range filters per tier.
+touched); every ``read_routed*`` read turns the segments into ONE scan
+per routed tier — that tier's segments share the scan, OR-ed into one
+filter — and unions the per-tier scans into one plan. A stored tier
+table's time axis is two-level: ``bucket_day`` directory partitions
+(pruned by the ``bucket_day`` bounds in ``time_range_filter``) and
+``bucket_start`` (or ``bucket_epoch`` for histograms) row-group min/max
+statistics inside each file (skipped by the pushed-down literal range).
 
 Reference analogue: the reference serves every query from the single
 per-height store (``storage.py:143-154``) — viable when one zone fits
@@ -26,10 +29,13 @@ LevelDB; tier routing is what replaces it at warehouse scale
 
 from __future__ import annotations
 
+import operator
 from functools import reduce
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from .bucketing import SECONDS, TIER_ORDER
 
@@ -89,6 +95,71 @@ def check_routable(
             )
 
 
+def time_range_filter(df: DataFrame, lo: int | None = None,
+                      hi: int | None = None) -> Column:
+    """Predicate keeping ``df``'s buckets that start in [lo, hi) (epoch
+    seconds; a None bound is open), written so a parquet scan prunes on
+    it: the bucket column (``bucket_epoch`` on histogram tables, else
+    ``bucket_start``) is compared with literals — a timestamp column
+    with ``timestamp_seconds`` literals, never cast to long, which
+    would block pushdown — and, when the frame has the ``bucket_day``
+    partition column, ``bucket_day`` is bounded by the days of ``lo``
+    and ``hi - 1``. Those bounds fold to date literals in the session
+    timezone, the basis the writers' ``to_date(bucket_start)`` used."""
+    col = "bucket_epoch" if "bucket_epoch" in df.columns else "bucket_start"
+    is_ts = isinstance(df.schema[col].dataType, TimestampType)
+
+    def at(e: int) -> Column:
+        return F.timestamp_seconds(F.lit(e)) if is_ts else F.lit(e)
+
+    day = "bucket_day" in df.columns
+    conds = []
+    if lo is not None:
+        conds.append(F.col(col) >= at(lo))
+        if day:
+            conds.append(F.col("bucket_day") >= F.to_date(F.timestamp_seconds(F.lit(lo))))
+    if hi is not None:
+        conds.append(F.col(col) < at(hi))
+        if day:
+            conds.append(F.col("bucket_day") <= F.to_date(F.timestamp_seconds(F.lit(hi - 1))))
+    return reduce(operator.and_, conds)
+
+
+def _routed(
+    frames: dict[str, DataFrame],
+    e0: int,
+    e1: int,
+    select: Callable[[DataFrame], DataFrame],
+    retention_horizons: dict[str, int | None] | None,
+    now_epoch: int | None,
+    tiers: list[str] | None = None,
+) -> DataFrame:
+    """Every routed read's branches: cover [e0, e1) with ``tiers``
+    (default: every tier in ``frames``), validate the cover against the
+    retention policy when one is given, then scan each routed tier ONCE
+    with its segments OR-ed (``time_range_filter`` each, plus ``NOT
+    gap_filled`` where the column exists), apply ``select`` and union
+    the per-tier branches."""
+    segs = route_range(e0, e1, tiers or [t for t in TIER_ORDER if t in frames])
+    if retention_horizons is not None:
+        if now_epoch is None:
+            raise ValueError("now_epoch required with retention_horizons")
+        check_routable(segs, retention_horizons, now_epoch)
+    if not segs:
+        raise ValueError(f"empty range [{e0}, {e1})")
+    spans: dict[str, list[tuple[int, int]]] = {}
+    for tier, lo, hi in segs:
+        spans.setdefault(tier, []).append((lo, hi))
+    parts = []
+    for tier, ranges in spans.items():
+        df = frames[tier]
+        cond = reduce(operator.or_, [time_range_filter(df, lo, hi) for lo, hi in ranges])
+        if "gap_filled" in df.columns:
+            cond = ~F.col("gap_filled") & cond
+        parts.append(select(df.where(cond)))
+    return reduce(DataFrame.unionByName, parts)
+
+
 def read_routed(
     tier_dfs: dict[str, DataFrame],
     e0: int,
@@ -99,9 +170,9 @@ def read_routed(
     now_epoch: int | None = None,
 ) -> DataFrame:
     """Per-key totals of one or more additive measures over [e0, e1),
-    scanning each routed segment from its own tier table. One union
-    plan; each branch is a range-pruned scan + nothing else; the final
-    groupBy is the only shuffle. ``measure`` may be a tuple — a
+    scanning each routed tier table once for all its segments. One
+    union plan; each branch is a partition-pruned scan + nothing else;
+    the final groupBy is the only shuffle. ``measure`` may be a tuple — a
     dashboard asking for (point_count, byte_size) together reads each
     tier segment ONCE, not once per measure (the scan is the expensive
     part; extra sum columns ride in the same shuffle for free).
@@ -110,27 +181,14 @@ def read_routed(
     segment against the retention policy before reading — a partial sum
     over expired partitions raises instead of returning silently."""
     measures = (measure,) if isinstance(measure, str) else tuple(measure)
-    segs = route_range(e0, e1, [t for t in TIER_ORDER if t in tier_dfs])
-    if retention_horizons is not None:
-        if now_epoch is None:
-            raise ValueError("now_epoch required with retention_horizons")
-        check_routable(segs, retention_horizons, now_epoch)
-    parts = []
-    for tier, lo, hi in segs:
-        df = tier_dfs[tier]
-        if "gap_filled" in df.columns:
-            df = df.where(~F.col("gap_filled"))
-        b = F.col("bucket_start").cast("long")
-        parts.append(
-            df.where((b >= lo) & (b < hi)).select(
-                *keys,
-                *[F.col(m).cast("long").alias(f"_v{i}")
-                  for i, m in enumerate(measures)],
-            )
-        )
-    if not parts:
-        raise ValueError("empty range")
-    allp = reduce(lambda a, b: a.unionByName(b), parts)
+    allp = _routed(
+        tier_dfs, e0, e1,
+        lambda df: df.select(
+            *keys,
+            *[F.col(m).cast("long").alias(f"_v{i}") for i, m in enumerate(measures)],
+        ),
+        retention_horizons, now_epoch,
+    )
     return allp.groupBy(*keys).agg(
         *[F.sum(f"_v{i}").alias(m) for i, m in enumerate(measures)]
     )
@@ -167,25 +225,16 @@ def read_routed_series(
     usable = [t for t in TIER_ORDER if t in tier_dfs and SECONDS[t] <= gsecs]
     if not usable:
         raise ValueError(f"no stored tier at or below grain {grain}")
-    segs = route_range(e0, e1, usable)
-    if retention_horizons is not None:
-        if now_epoch is None:
-            raise ValueError("now_epoch required with retention_horizons")
-        check_routable(segs, retention_horizons, now_epoch)
-    parts = []
-    for tier, lo, hi in segs:
-        df = tier_dfs[tier]
-        if "gap_filled" in df.columns:
-            df = df.where(~F.col("gap_filled"))
-        b = F.col("bucket_start").cast("long")
-        parts.append(
-            df.where((b >= lo) & (b < hi)).select(
-                *keys,
-                ((b / gsecs).cast("long") * gsecs).alias("_g"),
-                F.col(measure).cast("long").alias("_v"),
-            )
-        )
-    allp = reduce(lambda a, b: a.unionByName(b), parts)
+    b = F.col("bucket_start").cast("long")
+    allp = _routed(
+        tier_dfs, e0, e1,
+        lambda df: df.select(
+            *keys,
+            ((b / gsecs).cast("long") * gsecs).alias("_g"),
+            F.col(measure).cast("long").alias("_v"),
+        ),
+        retention_horizons, now_epoch, tiers=usable,
+    )
     return (
         allp.groupBy(*keys, "_g")
         .agg(F.sum("_v").alias(measure))
@@ -209,20 +258,10 @@ def read_routed_distinct(
     answer equals a single sketch built over the whole range — tested
     within HLL error vs exact distinct). Same segment plan as
     ``read_routed``; output (keys..., distinct_est long)."""
-    segs = route_range(e0, e1, [t for t in TIER_ORDER if t in sketch_dfs])
-    if retention_horizons is not None:
-        if now_epoch is None:
-            raise ValueError("now_epoch required with retention_horizons")
-        check_routable(segs, retention_horizons, now_epoch)
-    parts = []
-    for tier, lo, hi in segs:
-        b = F.col("bucket_start").cast("long")
-        parts.append(
-            sketch_dfs[tier].where((b >= lo) & (b < hi)).select(*keys, "url_sketch")
-        )
-    if not parts:
-        raise ValueError("empty range")
-    allp = reduce(lambda a, b: a.unionByName(b), parts)
+    allp = _routed(
+        sketch_dfs, e0, e1, lambda df: df.select(*keys, "url_sketch"),
+        retention_horizons, now_epoch,
+    )
     return (
         allp.groupBy(*keys)
         .agg(F.hll_union_agg("url_sketch").alias("_sk"))
@@ -247,20 +286,10 @@ def read_routed_kll(
     sketch. Merge is lossless over sketch state, so the routed answer
     equals a single whole-range merge (tested); rank error stays the
     per-sketch KLL bound. Output: (keys..., q50, q95, ... per qs)."""
-    segs = route_range(e0, e1, [t for t in TIER_ORDER if t in sketch_dfs])
-    if retention_horizons is not None:
-        if now_epoch is None:
-            raise ValueError("now_epoch required with retention_horizons")
-        check_routable(segs, retention_horizons, now_epoch)
-    parts = []
-    for tier, lo, hi in segs:
-        b = F.col("bucket_start").cast("long")
-        parts.append(
-            sketch_dfs[tier].where((b >= lo) & (b < hi)).select(*keys, "kll")
-        )
-    if not parts:
-        raise ValueError("empty range")
-    allp = reduce(lambda a, b: a.unionByName(b), parts)
+    allp = _routed(
+        sketch_dfs, e0, e1, lambda df: df.select(*keys, "kll"),
+        retention_horizons, now_epoch,
+    )
     out = allp.groupBy(*keys).agg(F.kll_merge_agg_bigint("kll").alias("_kll"))
     for q in qs:
         out = out.withColumn(
@@ -298,23 +327,11 @@ def read_routed_quantile(
     tests/test_router.py)."""
     from pyspark.sql import Window
 
-    segs = route_range(e0, e1, [t for t in TIER_ORDER if t in hist_dfs])
-    if retention_horizons is not None:
-        if now_epoch is None:
-            raise ValueError("now_epoch required with retention_horizons")
-        check_routable(segs, retention_horizons, now_epoch)
-    parts = []
-    for tier, lo, hi in segs:
-        df = hist_dfs[tier]
-        parts.append(
-            df.where((F.col("bucket_epoch") >= lo) & (F.col("bucket_epoch") < hi)).select(
-                *series_cols, "hb_lo", "hb_count"
-            )
-        )
-    if not parts:
-        raise ValueError("empty range")
     merged = (
-        reduce(lambda a, b: a.unionByName(b), parts)
+        _routed(
+            hist_dfs, e0, e1, lambda df: df.select(*series_cols, "hb_lo", "hb_count"),
+            retention_horizons, now_epoch,
+        )
         .groupBy(*series_cols, "hb_lo")
         .agg(F.sum("hb_count").alias("hb_count"))
     )
@@ -358,26 +375,12 @@ def read_routed_drift(
     """
     from .histogram import psi_from_counts
 
-    tiers = [t for t in TIER_ORDER if t in hist_dfs]
-    parts = []
-    for win, (e0, e1) in ((0, (a0, a1)), (1, (b0, b1))):
-        segs = route_range(e0, e1, tiers)
-        if retention_horizons is not None:
-            if now_epoch is None:
-                raise ValueError("now_epoch required with retention_horizons")
-            check_routable(segs, retention_horizons, now_epoch)
-        if not segs:
-            raise ValueError(f"empty range for window {win}")
-        for tier, lo, hi in segs:
-            parts.append(
-                hist_dfs[tier]
-                .where((F.col("bucket_epoch") >= lo) & (F.col("bucket_epoch") < hi))
-                .select(
-                    *series_cols,
-                    F.lit(win).alias("_w"),
-                    "hb_lo",
-                    "hb_count",
-                )
-            )
-    u = reduce(lambda a, b: a.unionByName(b), parts)
+    u = reduce(DataFrame.unionByName, [
+        _routed(
+            hist_dfs, e0, e1,
+            lambda df: df.select(*series_cols, F.lit(win).alias("_w"), "hb_lo", "hb_count"),
+            retention_horizons, now_epoch,
+        )
+        for win, (e0, e1) in enumerate(((a0, a1), (b0, b1)))
+    ])
     return psi_from_counts(u, list(series_cols), "_w", "hb_lo", "hb_count")

@@ -21,6 +21,8 @@ built in-memory) so they compose with any storage backend.
 from __future__ import annotations
 
 import datetime as dt
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -147,16 +149,25 @@ def series_points(
     ``t0``/``t1`` accept naive-UTC/aware datetimes or epoch seconds;
     comparisons happen in epoch space (timezone-safe)."""
     from .operators.retention import _to_epoch
+    from .operators.router import time_range_filter
 
     e0 = _to_epoch(t0) if t0 is not None else None
     e1 = _to_epoch(t1) if t1 is not None else None
 
-    hot = hot_tier_df.select(
+    # the time, url and gap filters go on the hot SCAN, in the form
+    # parquet prunes partitions and row groups on
+    conds = []
+    if e0 is not None or e1 is not None:
+        conds.append(time_range_filter(hot_tier_df, e0, e1))
+    if url is not None:
+        conds.append(F.col("url") == url)
+    if "gap_filled" in hot_tier_df.columns:
+        conds.append(~F.col("gap_filled"))
+    if conds:
+        hot_tier_df = hot_tier_df.where(reduce(operator.and_, conds))
+    parts = hot_tier_df.select(
         "url", "url_hash", "bucket_start", F.col(measure).cast("long").alias("value")
     ).withColumn("_src", F.lit(1))
-    if "gap_filled" in hot_tier_df.columns:
-        hot = hot.where(~hot_tier_df["gap_filled"])
-    parts = hot
     if cold_df is not None:
         from .operators.cold_store import decode_cold
 
@@ -170,14 +181,9 @@ def series_points(
         cold = decode_cold(blobs).select(
             "url", "url_hash", "bucket_start", F.col("value").cast("long").alias("value")
         ).withColumn("_src", F.lit(0))
-        parts = hot.unionByName(cold)
-
-    if url is not None:
-        parts = parts.where(F.col("url") == url)
-    if e0 is not None:
-        parts = parts.where(F.col("bucket_start").cast("long") >= F.lit(e0))
-    if e1 is not None:
-        parts = parts.where(F.col("bucket_start").cast("long") < F.lit(e1))
+        if e0 is not None or e1 is not None:
+            cold = cold.where(time_range_filter(cold, e0, e1))
+        parts = parts.unionByName(cold)
 
     per_src = parts.groupBy("url", "url_hash", "bucket_start", "_src").agg(
         F.sum("value").alias("value")

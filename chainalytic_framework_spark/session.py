@@ -105,7 +105,17 @@ def build_session(
         # showed major-GC outliers (12.8-16.7s pipeline spread at sf0.1,
         # stable ~12.5s at 24g). On a cluster this is driver-only and the
         # env override applies.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(_physical_memory()),
+        )
+        # PySpark 4.1 otherwise captures the Python call stack on every
+        # DataFrame and Column call, with extra py4j round trips each —
+        # a fixed cost on every plan a serving request builds. It only
+        # decorates error messages; pass
+        # extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}
+        # to get the call sites back.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Shuffle/spill scratch on tmpfs when available: local-mode
         # shuffles are disk-bound otherwise (a cluster has per-node
         # disks; one sandbox disk serializes them).
@@ -117,6 +127,24 @@ def build_session(
     spark = b.getOrCreate()
     _ship_package(spark)
     return spark
+
+
+def default_driver_memory(physical_bytes: int | None) -> str:
+    """Local-mode heap: 24g (the sf0.1 sizing above), but never more than
+    half the machine's memory — the JVM's off-heap and the Python
+    workers need the rest, and a 24g heap on a 16 GB host grew until
+    the kernel killed it. Unknown memory keeps 24g."""
+    cap_mb = 24 * 1024
+    if physical_bytes:
+        cap_mb = min(cap_mb, physical_bytes // 2 // 2**20)
+    return f"{cap_mb}m"
+
+
+def _physical_memory() -> int | None:
+    try:
+        return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (ValueError, OSError, AttributeError):
+        return None
 
 
 def _scratch_dir() -> str:

@@ -27,6 +27,9 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+import threading
+import weakref
+from collections import OrderedDict
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -206,6 +209,36 @@ def delete_where_sql(table: str, partition_col: str, values: list[str]) -> str:
     return f"DELETE FROM {table} WHERE {partition_col} IN ({quoted})"
 
 
+def _listing(base: str) -> tuple[tuple[str, int, int], ...]:
+    """(relative path, size, mtime_ns) of every parquet data file under
+    ``base``, in walk order — the table's snapshot as the file system
+    shows it. Every write, overwrite, delete or compaction adds, removes
+    or rewrites a data file, so an equal listing means unchanged data."""
+    out = []
+    for dirpath, dirs, files in os.walk(base):
+        # Spark skips hidden and in-flight paths (``_temporary``) too
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                p = os.path.join(dirpath, f)
+                st = os.stat(p)
+                out.append((os.path.relpath(p, base), st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+# Opened parquet tables: {session: OrderedDict{path: (listing, JVM
+# Dataset)}}, least recently used first. Opening a table costs a Spark
+# job (footer schema inference) plus a file listing; a serving request
+# re-opens every table it routes to, so reads of an unchanged table
+# reuse its opened Dataset. Sessions are held weakly, so a session built
+# after ``stop()`` never sees an earlier session's handles; the cached
+# value is the JVM handle, not a Python DataFrame, which would hold its
+# session and so keep the weak key alive forever.
+_HANDLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_HANDLES_LOCK = threading.Lock()
+MAX_OPEN_TABLES = 64
+
+
 @dataclass
 class TableStore:
     """Parquet-dir table store with Iceberg-shaped semantics.
@@ -230,13 +263,32 @@ class TableStore:
     def exists(self, name: str) -> bool:
         if (b := self.iceberg) is not None:
             return b.exists(name)
-        p = self.path(name)
-        return os.path.isdir(p) and any(f.endswith(".parquet") for _, _, fs in os.walk(p) for f in fs)
+        return bool(_listing(self.path(name)))
 
     def read(self, name: str) -> DataFrame:
+        """The table as a DataFrame. Parquet: opened once per file
+        listing and session — a read of an unchanged table returns the
+        handle the previous read opened, with no Spark job; any write
+        changes the listing, so the next read opens the new files."""
         if (b := self.iceberg) is not None:
             return b.read(name)
-        return self.spark.read.parquet(self.path(name))
+        path = self.path(name)
+        listing = _listing(path)
+        if not listing:  # let Spark raise its own error for a missing table
+            return self.spark.read.parquet(path)
+        with _HANDLES_LOCK:
+            handles = _HANDLES.setdefault(self.spark, OrderedDict())
+            hit = handles.get(path)
+            if hit is not None and hit[0] == listing:
+                handles.move_to_end(path)
+                return DataFrame(hit[1], self.spark)
+        df = self.spark.read.parquet(path)
+        with _HANDLES_LOCK:
+            handles[path] = (listing, df._jdf)
+            handles.move_to_end(path)
+            while len(handles) > MAX_OPEN_TABLES:
+                handles.popitem(last=False)
+        return df
 
     def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None,
               mode: str = "overwrite") -> None:
@@ -482,10 +534,7 @@ class TableStore:
         h = hashlib.sha256()
         if not os.path.isdir(base):
             return "empty"
-        for dirpath, _, files in sorted(os.walk(base)):
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    rel = os.path.relpath(os.path.join(dirpath, f), base)
-                    h.update(rel.encode())
-                    h.update(str(os.path.getsize(os.path.join(dirpath, f))).encode())
+        for rel, size, _ in _listing(base):
+            h.update(rel.encode())
+            h.update(str(size).encode())
         return h.hexdigest()[:16]

@@ -404,3 +404,56 @@ def test_read_routed_drift_equals_raw_psi_and_self_is_zero(spark):
     for r in self_cmp.collect():
         assert r.psi_x1e8 == 0
         assert r.n_bins_a_only == 0 and r.n_bins_b_only == 0
+
+
+def _file_scans(df):
+    """(PartitionFilters, PushedFilters) of every parquet scan in the
+    physical plan, untruncated."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        node = leaves.apply(i)
+        if node.nodeName().startswith("Scan parquet"):
+            md = node.metadata()
+            out.append((md.apply("PartitionFilters"), md.apply("PushedFilters")))
+    return out
+
+
+def test_routed_read_of_stored_tiers_scans_each_tier_once_pruned(spark, tiers, tmp_path):
+    """Over stored tier tables a ragged range is read with ONE scan per
+    routed tier (its segments OR-ed), each pruning bucket_day
+    partitions and pushing a bucket_start range to parquet, and the
+    answer equals the finest tier's."""
+    import re
+
+    from chainalytic_framework_spark.tables import TableStore
+
+    store = TableStore(spark, str(tmp_path))
+    for t, df in tiers.items():
+        store.write(df.withColumn("bucket_day", F.to_date("bucket_start")),
+                    f"tier_{t}", partition_by=["bucket_day"])
+    stored = {t: store.read(f"tier_{t}") for t in tiers}
+    a = 1704085020  # 2024-01-01 04:57 UTC
+    b = 1704548580  # 2024-01-06 13:43 UTC
+    segs = route_range(a, b)
+    routed_tiers = {t for t, _, _ in segs}
+    assert len(segs) > len(routed_tiers) >= 3  # ragged: tiers with several segments
+
+    df = read_routed(stored, a, b, "point_count", keys=("lang",))
+    got = {r["lang"]: r["point_count"] for r in df.collect()}
+    final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert final.count("FileScan parquet") == len(routed_tiers)
+    scans = _file_scans(df)
+    assert len(scans) == len(routed_tiers)
+    for part_filters, pushed in scans:
+        assert "bucket_day" in part_filters
+        assert re.search(r"GreaterThanOrEqual\(bucket_start,", pushed), pushed
+        assert re.search(r"LessThan\(bucket_start,", pushed), pushed
+
+    b_ = F.col("bucket_start").cast("long")
+    want = {
+        r["lang"]: r["pc"]
+        for r in tiers["1m"].where((b_ >= a) & (b_ < b))
+        .groupBy("lang").agg(F.sum("point_count").alias("pc")).collect()
+    }
+    assert got == want

@@ -282,3 +282,119 @@ def test_parquet_read_as_of_only_current(spark, tmp_path):
 
     with _p.raises(ValueError, match="current snapshot"):
         store.read_as_of("t", "deadbeef")
+
+
+def _jobs_submitted(spark, fn):
+    """Spark job ids ``fn`` submits from this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_read_of_unchanged_table_reuses_its_handle(spark, tmp_path):
+    TableStore(spark, str(tmp_path)).write(
+        spark.range(12).selectExpr("id", "id % 3 as p"), "t", partition_by=["p"]
+    )
+    opened, first = _jobs_submitted(spark, lambda: TableStore(spark, str(tmp_path)).read("t"))
+    assert opened, "opening a parquet table infers its schema with a job"
+    # a new store instance, as a serving request makes one
+    jobs, again = _jobs_submitted(spark, lambda: TableStore(spark, str(tmp_path)).read("t"))
+    assert jobs == []
+    assert again._jdf.equals(first._jdf)
+    assert sorted(r["id"] for r in again.collect()) == list(range(12))
+
+
+def test_read_after_each_write_sees_the_new_files(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    store = TableStore(spark, str(tmp_path))
+
+    def ids(name):
+        return sorted(r["id"] for r in store.read(name).collect())
+
+    store.write(spark.range(10).selectExpr("id", "id % 2 as p"), "t", partition_by=["p"])
+    assert ids("t") == list(range(10))
+    store.overwrite_partitions(spark.range(100, 103).selectExpr("id", "0 as p"), "t", ["p"])
+    assert ids("t") == [1, 3, 5, 7, 9, 100, 101, 102]
+    store.delete_where_partition("t", "p", ["1"])
+    assert ids("t") == [100, 101, 102]
+
+    def state(rows):
+        return spark.createDataFrame(rows, "url string, id long").withColumn(
+            "state_bucket", F.pmod(F.xxhash64("url"), F.lit(4)).cast("int")
+        )
+
+    store.merge_upsert(state([("a", 1), ("b", 2)]), "s", key="url")
+    assert ids("s") == [1, 2]
+    store.merge_upsert(state([("b", 20), ("c", 3)]), "s", key="url")
+    assert ids("s") == [1, 3, 20]
+
+    store.write(
+        spark.range(40, numPartitions=8).selectExpr("id", "id % 2 as p"), "c", partition_by=["p"]
+    )
+    before = store.read("c")
+    assert store.compact_partitions("c", ["p"], max_files_per_partition=1) == 2
+    # same rows, new files: the old handle's files are gone
+    after = store.read("c")
+    assert not after._jdf.equals(before._jdf)
+    assert ids("c") == list(range(40))
+
+
+def test_open_tables_are_bounded_least_recently_used_first(spark, tmp_path, monkeypatch):
+    from chainalytic_framework_spark import tables
+
+    monkeypatch.setattr(tables, "MAX_OPEN_TABLES", 2)
+    store = TableStore(spark, str(tmp_path))
+    for n in ("a", "b", "c"):
+        store.write(spark.range(3).selectExpr("id", "id as p"), n, partition_by=["p"])
+    a = store.read("a")
+    store.read("b")
+    assert store.read("a")._jdf.equals(a._jdf)  # a is now the most recent
+    store.read("c")  # evicts b
+    open_paths = [p for p in tables._HANDLES[spark] if p.startswith(str(tmp_path))]
+    assert open_paths == [store.path("a"), store.path("c")]
+    assert len(tables._HANDLES[spark]) <= 2
+    jobs, _ = _jobs_submitted(spark, lambda: store.read("b"))
+    assert jobs, "an evicted table is opened again"
+
+
+STOPPED_SESSION_SCRIPT = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from chainalytic_framework_spark.session import build_session
+from chainalytic_framework_spark.tables import TableStore
+
+root = sys.argv[2]
+s1 = build_session(app_name="handles-1", master="local[1]", shuffle_partitions=1)
+TableStore(s1, root).write(s1.range(7).selectExpr("id", "id % 2 as p"), "t", partition_by=["p"])
+old = TableStore(s1, root).read("t")
+s1.stop()
+s2 = build_session(app_name="handles-2", master="local[1]", shuffle_partitions=1)
+new = TableStore(s2, root).read("t")
+print("RESULT", new.sparkSession is s2, s2 is not s1, new.count())
+s2.stop()
+"""
+
+
+def test_session_built_after_stop_gets_no_old_handle(tmp_path):
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", STOPPED_SESSION_SCRIPT, repo, str(tmp_path)],
+        capture_output=True, text=True, timeout=300, env=env,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT")]
+    assert lines, out.stderr[-2000:]
+    # a handle of the stopped session would fail to count
+    assert lines[0] == "RESULT True True 7"

@@ -36,8 +36,21 @@ r2 = run_pipeline(spark, pages, store, with_fold=False)
 days = [str(x["day"]) for x in
         store.read("checkpoints").selectExpr("to_date(bucket_range_start) AS day")
         .where("tier = '1m'").distinct().orderBy("day").collect()]
+# a ragged routed read over the stored tiers (bucket_day pruning bounds
+# are computed in Spark, never in the driver's timezone) must equal the
+# finest stored tier; retention dropped the 1m tier, so hours are finest
+from pyspark.sql import functions as F
+from chainalytic_framework_spark.operators.router import read_routed
+stored = {{t: store.read(f"tier_{{t}}") for t in ("1h", "1d", "30d")
+          if store.exists(f"tier_{{t}}")}}
+a, b = 1704085200, 1704546000  # 2024-01-01 05:00 .. 2024-01-06 13:00 UTC
+routed = {{r["lang"]: r["point_count"] for r in
+          read_routed(stored, a, b, "point_count", keys=("lang",)).collect()}}
+e = F.col("bucket_start").cast("long")
+finest = {{r["lang"]: r["pc"] for r in stored["1h"].where((e >= a) & (e < b))
+          .groupBy("lang").agg(F.sum("point_count").alias("pc")).collect()}}
 print("RESULT" + json.dumps({{"p1": r1["pending_days"], "p2": r2["pending_days"],
-                              "days": days}}))
+                              "days": days, "routed": routed, "finest": finest}}))
 spark.stop()
 """
 
@@ -69,6 +82,8 @@ def test_pipeline_is_driver_timezone_independent(tmp_path):
     )
     # committed manifest days render the same UTC days
     assert r_utc["days"] == r_jst["days"]
+    # routed reads of the stored tiers are exact on both drivers
+    assert r_jst["routed"] and r_jst["routed"] == r_jst["finest"] == r_utc["routed"]
 
     # every committed table is row-identical across driver timezones
     for tier in ("tier_1m", "tier_1h", "tier_1d", "tier_30d"):
