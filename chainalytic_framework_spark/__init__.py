@@ -18,7 +18,7 @@ Common-Crawl-style web pages:
 - a query layer mirroring the provider JSON-RPC API shapes
   (``docs/provider_api.adoc``) as plain DataFrame functions,
 - large-scale training-data ops: dedup (exact / MinHash-LSH / SimHash /
-  n-gram Jaccard), similarity search, text analysis, multimodal plumbing.
+  n-gram Jaccard), similarity search, text analysis.
 
 Everything is DataFrame/SQL-first: Catalyst owns planning; Python appears
 only in vectorized pandas/Arrow UDFs (no per-row Python UDFs anywhere).

@@ -13,8 +13,7 @@ removal pipelines (C4, CCNet) apply before their quality filters.
 Semantic extraction (readability/trafilatura-style main-content
 detection) needs a DOM and is deliberately out of scope; plug it in as
 a mapInPandas stage behind the same column contract if the cluster
-ships the library (same pattern as functions/multimodal.py's decode
-stub — but unlike image decode, THIS extractor is fully real).
+ships the library.
 
 Every rewrite is `regexp_replace` with RE2-compatible patterns
 (non-greedy, (?is) flags — no backrefs), so the DuckDB oracle runs the

@@ -1,4 +1,4 @@
-"""Tier specs, tumbling-bucket expressions, key hashing, salting.
+"""Tier widths, tumbling-bucket expressions, key hashing.
 
 The engine's time axis is four epoch-aligned tumbling tiers. Buckets
 are computed arithmetically (``floor(epoch / width) * width``) rather
@@ -6,8 +6,8 @@ than via ``F.window`` structs: identical semantics for tumbling
 windows, no struct overhead, exactly reproducible in ANSI SQL (oracle
 parity), and — because 30d = 30 × 1d = 720 × 1h = 43200 × 1m — every
 finer bucket nests exactly inside its coarser parent, which is what
-makes the downsample cascade (operators/cascade.py) re-aggregate
-losslessly.
+makes the downsample cascade (``downsample_with_spec`` in
+operators/registry.py) re-aggregate losslessly.
 
 Reference analogue: block height as the discrete time axis
 (``/root/reference/zones/public-icon/warehouse/storage.py:118-123``);
@@ -16,15 +16,11 @@ one height == one finest-tier bucket.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 SECONDS = {"1m": 60, "1h": 3600, "1d": 86400, "30d": 2_592_000}
 TIER_ORDER = ["1m", "1h", "1d", "30d"]
-# parent tier each tier cascades FROM (None = from raw input)
-CASCADE_PARENT = {"1m": None, "1h": "1m", "1d": "1h", "30d": "1d"}
 
 # Default key-space bucketing for state/fold partitioning — the unit of
 # fold parallelism AND of per-group pandas overhead. Size it to the
@@ -35,25 +31,6 @@ CASCADE_PARENT = {"1m": None, "1h": "1m", "1d": "1h", "30d": "1d"}
 import os as _os
 
 N_URL_BUCKETS = int(_os.environ.get("SPARK_GRAFT_URL_BUCKETS", "256"))
-
-
-@dataclass(frozen=True)
-class TierSpec:
-    name: str
-
-    @property
-    def seconds(self) -> int:
-        return SECONDS[self.name]
-
-    @property
-    def parent(self) -> str | None:
-        return CASCADE_PARENT[self.name]
-
-
-def tier(name: str) -> TierSpec:
-    if name not in SECONDS:
-        raise ValueError(f"unknown tier {name!r}; expected one of {TIER_ORDER}")
-    return TierSpec(name)
 
 
 def bucket_start(ts: Column | str, tier_name: str) -> Column:
@@ -67,17 +44,9 @@ def bucket_start(ts: Column | str, tier_name: str) -> Column:
     return F.timestamp_seconds((c.cast("long") / secs).cast("long") * secs)
 
 
-def bucket_start_sql(ts_expr: str, tier_name: str) -> str:
-    """The same bucket expression in ANSI/DuckDB SQL (oracle parity)."""
-    secs = SECONDS[tier_name]
-    return (
-        f"CAST(to_timestamp(CAST(floor(epoch({ts_expr}) / {secs}) AS BIGINT) * {secs}) AS TIMESTAMP)"
-    )
-
-
 def url_hash(url: Column | str = "url") -> Column:
     """64-bit stable key hash. xxhash64 is JVM-side, codegen-friendly,
-    and uniform — the basis of url bucketing, salting, and state joins."""
+    and uniform — the basis of url bucketing and state joins."""
     c = F.col(url) if isinstance(url, str) else url
     return F.xxhash64(c)
 
@@ -86,16 +55,6 @@ def url_bucket(url: Column | str = "url", n_buckets: int = N_URL_BUCKETS) -> Col
     return F.pmod(F.xxhash64(F.col(url) if isinstance(url, str) else url), F.lit(n_buckets)).cast(
         "int"
     )
-
-
-def salt_col(url: Column | str, n_salts: int, extra: Column | None = None) -> Column:
-    """Salt for hot-key two-stage aggregation: a second, independent hash
-    of the key (different seed via string concat) modulo n_salts.
-    ``extra`` (e.g. the timestamp) decorrelates rows of the same key so
-    a single hot url spreads across all salts."""
-    c = F.col(url) if isinstance(url, str) else url
-    basis = F.xxhash64(c, extra) if extra is not None else F.xxhash64(c, F.lit("salt"))
-    return F.pmod(basis, F.lit(n_salts)).cast("int")
 
 
 _CALENDAR_UNITS = ("week", "month", "quarter", "year")
@@ -115,10 +74,3 @@ def calendar_bucket(ts: Column | str, unit: str) -> Column:
         raise ValueError(f"unknown calendar unit {unit!r}; expected {_CALENDAR_UNITS}")
     c = F.col(ts) if isinstance(ts, str) else ts
     return F.date_trunc(unit, c.cast("timestamp")).cast("long")
-
-
-def calendar_bucket_sql(ts_expr: str, unit: str) -> str:
-    """The same calendar bucket in DuckDB SQL (oracle parity)."""
-    if unit not in _CALENDAR_UNITS:
-        raise ValueError(f"unknown calendar unit {unit!r}; expected {_CALENDAR_UNITS}")
-    return f"CAST(floor(epoch(date_trunc('{unit}', {ts_expr}))) AS BIGINT)"

@@ -58,15 +58,6 @@ def decade_digit_bucket(c: Column) -> Column:
     return F.when(c <= 0, F.lit(0).cast("long")).otherwise(lo)
 
 
-def decade_digit_bucket_sql(expr: str) -> str:
-    """DuckDB oracle twin of :func:`decade_digit_bucket`."""
-    s = f"CAST({expr} AS VARCHAR)"
-    return (
-        f"CASE WHEN {expr} <= 0 THEN 0 ELSE "
-        f"CAST(rpad(substr({s}, 1, 1), CAST(length({s}) AS INTEGER), '0') AS BIGINT) END"
-    )
-
-
 def histogram_rollup(
     df: DataFrame,
     bucket_epoch: Column,
@@ -93,7 +84,8 @@ def histogram_downsample(hist: DataFrame, series_cols: list[str], parent_secs: i
     """Merge a finer histogram tier into a coarser one — reads the STORED
     child tier only (continuous-aggregate cascade), never raw. Lossless:
     the bucket layout is data-independent, so merging is `sum(hb_count)`
-    per re-bucketed epoch. Same plan shape as operators/cascade.py.
+    per re-bucketed epoch. Same plan shape as the registry's
+    ``downsample_with_spec``.
     """
     parent_epoch = ((F.col("bucket_epoch") / parent_secs).cast("long") * parent_secs).alias(
         "bucket_epoch"

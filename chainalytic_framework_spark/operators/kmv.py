@@ -180,7 +180,7 @@ def kmv_merge(
     the global k smallest is a fortiori among its own part's k
     smallest) — so per-day stored sketches roll up to exact range
     sketches the same way additive tier measures cascade
-    (operators/cascade.py), and overlap over ANY time range reads
+    (``downsample_with_spec``), and overlap over ANY time range reads
     sketch rows, never raw keys. Input per key is bounded by
     parts·k longs (a year of daily sketches at k=256 is ~10⁵)."""
     merged = F.slice(

@@ -10,9 +10,9 @@ closing ORDER KEYS (``open_ts, open_tie`` / ``close_ts, close_tie``)
 re-aggregates exactly — merged open = the open of the partial with the
 smallest open key (``min_by``), merged high/low/count = min/max/sum.
 That property is what lets the tier cascade (1m → 1h → 1d → 30d,
-operators/cascade.py) maintain candles without ever re-reading raw
-input, exactly like the engine's sum/count/min/max measures
-(operators/rollup.py ``reagg_measures``).
+``downsample_with_spec`` in operators/registry.py) maintain candles
+without ever re-reading raw input, exactly like the engine's
+sum/count/min/max measures (the ``reagg`` of ``DEFAULT_SET``).
 
 Reference analogue: grouped last-value per key (dict-overwrite
 semantics, ``/root/reference/zones/public-icon/aggregator/transform_registry/stake_top100.py:53-54``)

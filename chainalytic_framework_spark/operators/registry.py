@@ -127,9 +127,9 @@ def rollup_with_spec(
     time_col: str = "warc_ts",
     keys: tuple[str, ...] = ("url_hash", "url", "lang"),
 ) -> DataFrame:
-    """Finest-tier rollup of source rows under a metric set. Same plan
-    shape as operators/rollup.py: one groupBy on (bucket, keys) with
-    map-side partial aggregation; no Python."""
+    """Finest-tier rollup of source rows under a metric set: one
+    groupBy on (bucket, keys) with map-side partial aggregation; no
+    Python."""
     b = bucket_start(time_col, tier_name).alias("bucket_start")
     present = [k for k in keys if k in df.columns]
     derived = [f().alias(n) for n, f in ms.derived_keys]
@@ -187,8 +187,8 @@ def rollup_with_spec_clustered(
     paid two tier-row shuffles — the agg exchange, then
     ``cluster_for_write_hash`` — this pays one, on the narrower source
     rows, and the local sort restores row-group min/max clustering.
-    Output columns and values match
-    ``with_layout_columns(rollup_with_spec(...))`` exactly (order
+    Output columns and values match :func:`rollup_with_spec` plus the
+    ``bucket_day``/``url_bucket`` layout columns exactly (order
     included). Requires ``url_hash`` and ``url`` in ``df``."""
     present = [k for k in keys if k in df.columns]
     derived = [f().alias(n) for n, f in ms.derived_keys]
@@ -209,8 +209,8 @@ def downsample_with_spec_clustered(
     """Downsample whose ONE exchange is already the child tier's write
     layout — the cascade-child analogue of
     :func:`rollup_with_spec_clustered` (same leading-key trick, same
-    exact-output contract vs ``with_layout_columns(downsample_with_spec
-    (...))``). Requires url_hash/url in the parent grain."""
+    exact-output contract vs :func:`downsample_with_spec` plus the
+    layout columns). Requires url_hash/url in the parent grain."""
     src = parent_tier_df
     if "gap_filled" in src.columns:
         src = src.where(~F.col("gap_filled"))
@@ -229,10 +229,10 @@ def downsample_with_spec(
     keys: tuple[str, ...] = ("url_hash", "url", "lang"),
 ) -> DataFrame:
     """Re-aggregate a finer tier's stored partials into the next coarser
-    scheduled tier (continuous-aggregate maintenance; cascade.py
-    semantics, spec-driven). Gap-filled rows are excluded — LOCF points
-    are interpolations, not observations. ``keys`` is the grain; only
-    columns actually present participate."""
+    scheduled tier (continuous-aggregate maintenance, spec-driven).
+    Gap-filled rows are excluded — LOCF points are interpolations, not
+    observations. ``keys`` is the grain; only columns actually present
+    participate."""
     src = parent_tier_df
     if "gap_filled" in src.columns:
         src = src.where(~F.col("gap_filled"))
@@ -256,8 +256,10 @@ def downsample_with_spec(
 # built-in sets
 # ---------------------------------------------------------------------------
 
-# The engine default — identical columns and plan to the hand-written
-# rollup_observations (equality-tested in tests/test_registry.py).
+# The engine default, and the ONE definition of the tier measures: the
+# batch tiers (run_pipeline) and the streaming 1m rollup
+# (streaming/stream.py) both aggregate these specs, and
+# tests/test_registry.py checks them against a pandas oracle.
 # Operates on the prepared-observation schema (text_len/html_len), i.e.
 # AFTER prepare_observations narrowed blobs to lengths JVM-side.
 DEFAULT_SET = register(

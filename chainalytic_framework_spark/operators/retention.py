@@ -21,9 +21,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from ..tables import TableStore
 from .bucketing import SECONDS, TIER_ORDER
 
@@ -119,16 +116,3 @@ def enforce_retention(
     horizon = safe_horizon(_to_epoch(now) - h, parent_committed_max, parent_name)
     victims = expired_partitions(store, table, horizon)
     return store.delete_where_partition(table, "bucket_day", victims)
-
-
-def retention_filter(tier_df: DataFrame, tier_name: str, now: dt.datetime,
-                     horizons: dict[str, int | None] | None = None) -> DataFrame:
-    """Logical-view variant: filter a tier to its live horizon (used by
-    the query layer so readers never see expired buckets mid-cycle)."""
-    horizons = horizons or DEFAULT_HORIZONS
-    h = horizons.get(tier_name)
-    if h is None:
-        return tier_df
-    # epoch compare — a naive datetime literal would be interpreted in
-    # the driver's local timezone by TimestampType.toInternal
-    return tier_df.where(F.col("bucket_start").cast("long") >= F.lit(_to_epoch(now) - h))

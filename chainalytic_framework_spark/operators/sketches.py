@@ -6,7 +6,7 @@ store a MERGEABLE HyperLogLog partial instead: the finest tier
 aggregates raw urls once (``hll_sketch_agg``, Apache DataSketches HLL
 inside Spark), and every coarser bucket is a cheap ``hll_union_agg`` of
 its children — the same continuous-aggregate contract as the numeric
-measures (operators/cascade.py), extended to a non-algebraic metric.
+measures (operators/registry.py), extended to a non-algebraic metric.
 Standard error ≈ 1.04/√2^lg_k (~1.6% at the default lg_k=12);
 ``tests/test_sketches.py`` asserts the bound through a full cascade.
 

@@ -41,8 +41,7 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(nshuffle))
         # AQE: runtime partition coalescing + skew-join handling. At 100 TB
-        # this is the first line of defense against hot-domain skew; the
-        # second is explicit salting in operators/rollup.py.
+        # this is the engine's defense against hot-domain skew.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # parallelism-first coalescing targets max(bytes/parallelism,

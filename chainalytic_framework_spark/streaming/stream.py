@@ -20,7 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.rollup import with_layout_columns
+from ..operators.bucketing import url_bucket
+from ..operators.fold import prepare_observations
+from ..operators.registry import DEFAULT_SET
 from ..tables import TableStore
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -41,26 +43,17 @@ def read_pages_stream(
 def streaming_rollup_1m(pages_stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Watermarked tumbling 1-minute rollup at url grain. Late rows
     beyond the watermark are dropped (documented policy, T3) — the
-    batch pipeline re-derives exact history on its next run."""
-    w = pages_stream.withWatermark("warc_ts", watermark)
+    batch pipeline re-derives exact history on its next run. Rows are
+    narrowed and aggregated exactly as the batch 1m tier is (the
+    registry's ``DEFAULT_SET``), so stream rows and batch rows share
+    one schema and compact into ``tier_1m`` interchangeably."""
+    obs = prepare_observations(pages_stream).withWatermark("warc_ts", watermark)
     return (
-        w.groupBy(
-            F.window("warc_ts", "1 minute").alias("win"),
-            F.xxhash64("url").alias("url_hash"),
-            F.col("url"),
-            F.col("lang"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("point_count"),
-            F.sum(F.octet_length("html")).alias("byte_size"),
-            F.sum(F.length("text")).alias("text_len_sum"),
-            F.min(F.length("text")).alias("text_len_min"),
-            F.max(F.length("text")).alias("text_len_max"),
-        )
+        obs.groupBy(F.window("warc_ts", "1 minute").alias("win"), "url_hash", "url", "lang")
+        .agg(*[m.agg().alias(m.name) for m in DEFAULT_SET.metrics])
         .select(
             F.col("win.start").alias("bucket_start"),
-            "url_hash", "url", "lang",
-            "point_count", "byte_size", "text_len_sum", "text_len_min", "text_len_max",
+            "url_hash", "url", "lang", *DEFAULT_SET.metric_names(),
         )
         .withColumn("tier", F.lit("1m"))
         .withColumn("gap_filled", F.lit(False))
@@ -90,7 +83,8 @@ def start_stream_to_store(
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        out = with_layout_columns(batch_df)
+        out = (batch_df.withColumn("bucket_day", F.to_date("bucket_start"))
+               .withColumn("url_bucket", url_bucket("url")))
         out.persist()
         # through the TableStore so a cluster's foreachBatch appends to
         # the same Iceberg warehouse as the batch pipeline

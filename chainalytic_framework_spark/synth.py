@@ -152,7 +152,3 @@ def generate_pages(
 
     nparts = n_partitions or max(1, min(64, n_rows // 20_000 + 1))
     return spark.range(0, n_rows, numPartitions=nparts).mapInPandas(gen, schema=PAGES_SCHEMA)
-
-
-def write_pages(spark: SparkSession, path: str, n_rows: int, **kw) -> None:
-    generate_pages(spark, n_rows, **kw).write.mode("overwrite").parquet(path)

@@ -5,13 +5,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from chainalytic_framework_spark.operators.cold_store import decode_cold, encode_cold
-from chainalytic_framework_spark.operators.rollup import rollup_pages
+from chainalytic_framework_spark.operators.fold import prepare_observations
+from chainalytic_framework_spark.operators.registry import DEFAULT_SET, rollup_with_spec
 
 MEASURES = ["point_count", "byte_size", "text_len_sum"]
 
 
 def test_cold_roundtrip(spark, pages):
-    tier = rollup_pages(pages, "1h", grain="url").cache()
+    tier = rollup_with_spec(prepare_observations(pages), DEFAULT_SET, "1h").cache()
     cold = encode_cold(tier, MEASURES, n_buckets=16).cache()
     back = decode_cold(cold)
 
@@ -29,7 +30,7 @@ def test_cold_roundtrip(spark, pages):
 
 
 def test_cold_metadata_and_compression(spark, pages):
-    tier = rollup_pages(pages, "1h", grain="url")
+    tier = rollup_with_spec(prepare_observations(pages), DEFAULT_SET, "1h")
     cold = encode_cold(tier, MEASURES, n_buckets=16).cache()
     bad = cold.where(
         (F.col("n_points") <= 0) | (F.col("t1") < F.col("t0")) | (F.col("blob_bytes") <= 0)
@@ -51,10 +52,9 @@ def test_series_points_unified_hot_cold(spark, pages):
     from pyspark.sql import functions as F
 
     from chainalytic_framework_spark.operators.cold_store import encode_cold
-    from chainalytic_framework_spark.operators.rollup import rollup_pages
     from chainalytic_framework_spark.queries import series_points
 
-    tier = rollup_pages(pages, "1d", grain="url").cache()
+    tier = rollup_with_spec(prepare_observations(pages), DEFAULT_SET, "1d").cache()
     baseline = series_points(tier, None, measure="byte_size")
 
     cold = encode_cold(tier, measures=["byte_size"]).cache()
@@ -189,7 +189,7 @@ def test_cold_encode_bulk_vs_day_keyed_same_points(spark, pages):
     decodes to exactly the same point set as the day-keyed policy
     shape — the key granularity changes the blob layout, never the
     data; bulk blobs must also be strictly fewer rows."""
-    tier = rollup_pages(pages, "1h", grain="url").cache()
+    tier = rollup_with_spec(prepare_observations(pages), DEFAULT_SET, "1h").cache()
     day = encode_cold(tier, MEASURES, n_buckets=16).cache()
     bulk = encode_cold(tier, MEASURES, n_buckets=16, day_keyed=False).cache()
     assert bulk.count() < day.count()

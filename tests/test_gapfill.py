@@ -5,11 +5,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from chainalytic_framework_spark.operators.gapfill import gapfill_locf, last_observation_state
-from chainalytic_framework_spark.operators.rollup import rollup_pages
+from chainalytic_framework_spark.operators.fold import prepare_observations
+from chainalytic_framework_spark.operators.registry import DEFAULT_SET, rollup_with_spec
 
 
 def _tier(spark, pages):
-    return rollup_pages(pages, "1h", grain="url")
+    return rollup_with_spec(prepare_observations(pages), DEFAULT_SET, "1h")
 
 
 def test_no_gaps_remain_inside_span(spark, pages):

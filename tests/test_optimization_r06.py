@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from chainalytic_framework_spark.operators.bucketing import url_bucket
 from chainalytic_framework_spark.operators.fold import prepare_observations
 from chainalytic_framework_spark.operators.registry import (
     downsample_with_spec,
@@ -16,7 +17,12 @@ from chainalytic_framework_spark.operators.registry import (
     rollup_with_spec,
     rollup_with_spec_clustered,
 )
-from chainalytic_framework_spark.operators.rollup import with_layout_columns
+
+
+def with_layout_columns(tier_df):
+    """The tier-table write layout the clustered builders fuse in."""
+    return (tier_df.withColumn("bucket_day", F.to_date("bucket_start"))
+            .withColumn("url_bucket", url_bucket("url")))
 
 
 def _sorted_rows(df, cols=None):

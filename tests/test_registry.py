@@ -1,14 +1,17 @@
-"""§2.10 metric-spec registry: default set equals the hand-written
-rollup; custom sets cascade losslessly, drive the pipeline end-to-end
-(including the fold hook), and honor their tier schedule."""
+"""§2.10 metric-spec registry: the default set matches a pandas oracle
+and stores integer measures; custom sets cascade losslessly, drive the
+pipeline end-to-end (including the fold hook), and honor their tier
+schedule."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from chainalytic_framework_spark.operators.fold import prepare_observations
 from chainalytic_framework_spark.operators.registry import (
+    DEFAULT_SET,
     MetricSet,
     MetricSpec,
     downsample_with_spec,
@@ -17,7 +20,6 @@ from chainalytic_framework_spark.operators.registry import (
     register,
     rollup_with_spec,
 )
-from chainalytic_framework_spark.operators.rollup import rollup_observations
 from chainalytic_framework_spark.plans.pipeline import run_pipeline
 from chainalytic_framework_spark.synth import generate_pages
 from chainalytic_framework_spark.tables import TableStore
@@ -27,12 +29,72 @@ def _df_equal(a, b) -> bool:
     return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_default_set_matches_handwritten(spark, pages):
+MEASURES = ("point_count", "byte_size", "text_len_sum", "text_len_min", "text_len_max")
+
+
+def _pandas_oracle_url_grain(pdf: pd.DataFrame, secs: int) -> pd.DataFrame:
+    """Single-process re-implementation of the default measures (SURVEY.md
+    §5 test strategy item 1): what the reference's per-height loop would
+    produce, re-keyed to (url, bucket)."""
+    df = pdf.copy()
+    df["bucket_start"] = pd.to_datetime(
+        (df["warc_ts"].astype("int64") // 1_000_000_000 // secs) * secs, unit="s"
+    )
+    df["text_len"] = df["text"].str.len()
+    df["html_len"] = df["html"].map(len)
+    g = df.groupby(["bucket_start", "url", "lang"], as_index=False).agg(
+        point_count=("url", "size"),
+        byte_size=("html_len", "sum"),
+        text_len_sum=("text_len", "sum"),
+        text_len_min=("text_len", "min"),
+        text_len_max=("text_len", "max"),
+    )
+    return g.sort_values(["bucket_start", "url"], ignore_index=True)
+
+
+def test_rollup_1h_matches_pandas_oracle(spark, pages):
+    got = (
+        rollup_with_spec(prepare_observations(pages), DEFAULT_SET, "1h")
+        .select("bucket_start", "url", "lang", *MEASURES)
+        .toPandas()
+        .sort_values(["bucket_start", "url"], ignore_index=True)
+    )
+    exp = _pandas_oracle_url_grain(pages.toPandas(), 3600)
+    got["bucket_start"] = got["bucket_start"].astype("datetime64[ns]")
+    exp = exp[got.columns]
+    for c in MEASURES:
+        got[c] = got[c].astype("int64")
+        exp[c] = exp[c].astype("int64")
+    pd.testing.assert_frame_equal(got, exp)
+
+
+def test_measures_are_integer_types(spark, pages):
+    """Every default measure is stored as bigint, whatever tier builds it."""
+    fine = rollup_with_spec(prepare_observations(pages), DEFAULT_SET, "1m")
+    for df in (fine, downsample_with_spec(fine, DEFAULT_SET, "1h")):
+        kinds = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+        for c in MEASURES:
+            assert kinds[c] == "bigint", (c, kinds[c])
+
+
+def test_cascade_lang_grain(spark, pages):
+    """The cascade is lossless at a non-url grain too."""
     obs = prepare_observations(pages)
-    ms = get_metric_set("default")
-    a = rollup_with_spec(obs, ms, "1m")
-    b = rollup_observations(obs, "1m")
-    assert a.columns == b.columns
+    lang = ("lang",)
+    stepped = rollup_with_spec(obs, DEFAULT_SET, "1m", keys=lang)
+    for child in ("1h", "1d"):
+        stepped = downsample_with_spec(stepped, DEFAULT_SET, child, keys=lang)
+    direct = rollup_with_spec(obs, DEFAULT_SET, "1d", keys=lang)
+    assert stepped.columns == direct.columns == ["bucket_start", "lang", *MEASURES,
+                                                 "tier", "gap_filled"]
+    assert _df_equal(stepped, direct)
+
+
+def test_parallelism_invariance(spark, pages):
+    """Integer measures ⇒ exact equality across partition layouts
+    (the local stand-in for N vs 4N executors)."""
+    a = rollup_with_spec(prepare_observations(pages.repartition(2)), DEFAULT_SET, "1h")
+    b = rollup_with_spec(prepare_observations(pages.repartition(16)), DEFAULT_SET, "1h")
     assert _df_equal(a, b)
 
 

@@ -2,16 +2,8 @@
 
 from __future__ import annotations
 
-import datetime as dt
-import decimal
-
 from pyspark.sql import functions as F
 
-from chainalytic_framework_spark.functions.decode import (
-    hex_to_decimal_udf,
-    hex_to_scaled_double,
-    hex_to_scaled_double_udf,
-)
 from chainalytic_framework_spark.operators.fold import (
     extract_state,
     fold_observations,
@@ -61,31 +53,6 @@ def test_fold_hash_comparison_is_exact(spark):
     assert out2["text_changed"] is True
 
 
-def test_hex_fast_path_16_digits_and_0X(spark):
-    df = spark.createDataFrame(
-        [("0de0b6b3a7640000",), ("0000000000000001",), ("0Xde0b6b3a7640000",)], "h string"
-    )
-    got = [r["v"] for r in df.select(hex_to_scaled_double("h").alias("v")).collect()]
-    assert got[0] == 1.0
-    assert got[1] == 1e-18
-    assert got[2] == 1.0
-
-
-def test_decimal_udf_no_silent_rounding(spark):
-    v = 10**30 + 1  # needs 31 significant digits
-    hx = format(v, "x")
-    df = spark.createDataFrame([(hx,)], "h string")
-    got = df.select(hex_to_decimal_udf()("h").alias("v")).first()["v"]
-    with decimal.localcontext() as ctx:  # expectation needs full precision too
-        ctx.prec = 60
-        expected = decimal.Decimal(v) / decimal.Decimal(10**18)
-    assert got == expected == decimal.Decimal("1000000000000.000000000000000001")
-    # > 10^38 unscaled → NULL, not a downstream overflow
-    big = format(15 * 10**37, "x")
-    df2 = spark.createDataFrame([(big,)], "h string")
-    assert df2.select(hex_to_decimal_udf()("h").alias("v")).first()["v"] is None
-
-
 def test_recently_active_on_empty_tier(spark):
     from chainalytic_framework_spark.queries import recently_active_urls
 
@@ -93,23 +60,6 @@ def test_recently_active_on_empty_tier(spark):
         [], "bucket_start timestamp, url string, point_count long"
     )
     assert recently_active_urls(empty).count() == 0
-
-
-def test_multimodal_null_payload(spark):
-    from chainalytic_framework_spark.functions.multimodal import (
-        attach_media_metadata,
-        extract_image_features,
-    )
-
-    media = spark.createDataFrame(
-        [(1, "image", b"\xff\xd8\xff" + b"x" * 100, "image/jpeg", 103),
-         (2, "image", None, "image/jpeg", 0)],
-        "media_id long, kind string, payload binary, declared_mime string, n_bytes long",
-    )
-    feats = {r["media_id"]: r for r in
-             extract_image_features(attach_media_metadata(media)).collect()}
-    assert feats[1]["decode_ok"] is True
-    assert feats[2]["decode_ok"] is False and feats[2]["n_bytes"] == 0
 
 
 def test_snapshot_change_reprocesses_day(spark, tmp_path):

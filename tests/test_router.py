@@ -10,7 +10,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from chainalytic_framework_spark.operators.bucketing import SECONDS
-from chainalytic_framework_spark.operators.cascade import build_all_tiers
+from chainalytic_framework_spark.operators.fold import prepare_observations
+from chainalytic_framework_spark.operators.registry import (
+    DEFAULT_SET,
+    downsample_with_spec,
+    rollup_with_spec,
+)
 from chainalytic_framework_spark.operators.router import read_routed, route_range
 
 
@@ -49,7 +54,10 @@ def tiers(spark, pages):
     # regime where coarse tiers collapse rows and routing pays off; the
     # url-grain sparse regime routes identically (exactness test covers
     # any grain) but saves I/O only via partition pruning, not row count
-    t = build_all_tiers(pages, grain="lang")
+    lang = ("lang",)
+    t = {"1m": rollup_with_spec(prepare_observations(pages), DEFAULT_SET, "1m", keys=lang)}
+    for child, parent in DEFAULT_SET.cascade_pairs():
+        t[child] = downsample_with_spec(t[parent], DEFAULT_SET, child, keys=lang)
     return {k: v.cache() for k, v in t.items()}
 
 

@@ -3,10 +3,12 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from chainalytic_framework_spark.operators.rollup import rollup_pages
-from chainalytic_framework_spark.streaming.stream import start_stream_to_store
+from chainalytic_framework_spark.operators.fold import prepare_observations
+from chainalytic_framework_spark.operators.registry import DEFAULT_SET, rollup_with_spec
+from chainalytic_framework_spark.streaming.stream import start_stream_to_store, streaming_rollup_1m
 from chainalytic_framework_spark.synth import generate_pages
 from chainalytic_framework_spark.tables import TableStore
 
@@ -31,7 +33,7 @@ def test_stream_drain_matches_batch(spark, tmp_path):
         store.read("tier_1m_stream").drop("bucket_day", "url_bucket")
         .where(F.col("bucket_start") < F.lit(horizon))
     )
-    exp = rollup_pages(raw, "1m", grain="url").where(F.col("bucket_start") < F.lit(horizon))
+    exp = rollup_with_spec(prepare_observations(raw), DEFAULT_SET, "1m").where(F.col("bucket_start") < F.lit(horizon))
     assert got.exceptAll(exp).count() == 0
     assert exp.exceptAll(got).count() == 0
 
@@ -42,6 +44,75 @@ def test_stream_drain_matches_batch(spark, tmp_path):
     )
     q2.awaitTermination(300)
     assert store.read("tier_1m_stream").count() == n_before
+
+
+def test_stream_measures_match_batch_types(spark, tmp_path):
+    """The stream's 1m rows carry the batch tier's columns, in the batch
+    order and with the batch types — the registry's DEFAULT_SET is the
+    one definition of the measures both use."""
+    pages = generate_pages(spark, 200)
+    src = str(tmp_path / "pages_src")
+    pages.write.mode("overwrite").parquet(src)
+    stream = streaming_rollup_1m(spark.readStream.schema(pages.schema).parquet(src))
+    batch = rollup_with_spec(prepare_observations(pages), DEFAULT_SET, "1m")
+
+    def typed(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    assert typed(stream) == typed(batch)
+
+
+@pytest.mark.parametrize("first", ["pipeline", "stream"])
+def test_stream_compacted_into_pipeline_tier_stays_readable(spark, tmp_path, first):
+    """A warehouse fed by both run_pipeline and the stream, with stream
+    rows compacted into the tier's EARLIEST day: ``tier_1m`` must stay
+    readable in full (one parquet type per column across every day's
+    files) and equal the batch rollup of both inputs. ``pipeline``
+    builds the tier first; ``stream`` starts the tier from the stream
+    and extends it with the pipeline's later days."""
+    import datetime as dt
+
+    from chainalytic_framework_spark.plans.pipeline import run_pipeline
+    from chainalytic_framework_spark.streaming.stream import compact_stream_into_batch
+
+    pages = generate_pages(spark, 2000).cache()
+    d0 = pages.agg(F.min(F.to_date("warc_ts"))).first()[0]
+    batch_pages = pages if first == "pipeline" else pages.where(F.to_date("warc_ts") > d0)
+    store = TableStore(spark, str(tmp_path / "wh"))
+    if first == "pipeline":
+        run_pipeline(spark, batch_pages, store, with_fold=False)
+
+    # stream pages: fresh urls (no grain overlap with the batch rows) in
+    # the first half of day d0, plus one late sentinel page that
+    # advances the watermark past all of them; only the sentinel's own
+    # window is still open when the drain ends
+    t0 = dt.datetime.combine(d0, dt.time())
+    edge = generate_pages(
+        spark, 300, seed=7, t0=str(t0), t1=str(t0 + dt.timedelta(hours=12)),
+    ).withColumn("url", F.concat(F.lit("stream:"), "url"))
+    sentinel = edge.limit(1).select(
+        F.lit("stream:sentinel").alias("url"),
+        F.lit(t0 + dt.timedelta(hours=23, minutes=59)).alias("warc_ts"),
+        "html", "text", "lang",
+    )
+    src = str(tmp_path / "edge_src")
+    edge.unionByName(sentinel).write.mode("overwrite").parquet(src)
+    q = start_stream_to_store(
+        spark, src, store, checkpoint_dir=str(tmp_path / "ckpt"),
+        trigger_available_now=True,
+    )
+    q.awaitTermination(300)
+    assert compact_stream_into_batch(store) == [d0]
+    if first == "stream":
+        run_pipeline(spark, batch_pages, store, with_fold=False)
+
+    got = store.read("tier_1m").drop("bucket_day", "url_bucket")
+    streamed = spark.read.parquet(src).where(F.col("url") != "stream:sentinel")
+    exp = rollup_with_spec(
+        prepare_observations(batch_pages.unionByName(streamed)), DEFAULT_SET, "1m",
+    ).select(got.columns)
+    assert got.exceptAll(exp).count() == 0
+    assert exp.exceptAll(got).count() == 0
 
 
 def test_stream_sketch_partials_match_exact(spark, tmp_path):
@@ -109,7 +180,7 @@ def test_compact_stream_into_batch_matches_batch_rollup(spark, tmp_path):
         .where(F.col("bucket_start") < F.lit(horizon))
     )
     exp = (
-        rollup_pages(raw, "1m", grain="url").drop("tier", "gap_filled")
+        rollup_with_spec(prepare_observations(raw), DEFAULT_SET, "1m").drop("tier", "gap_filled")
         .where(F.col("bucket_start") < F.lit(horizon))
     )
     assert got.exceptAll(exp).count() == 0

@@ -16,7 +16,12 @@ sys.path.insert(0, ".")
 from chainalytic_framework_spark import contract
 from chainalytic_framework_spark.operators.fold import prepare_observations
 from chainalytic_framework_spark.operators.gapfill import gapfill_locf
-from chainalytic_framework_spark.operators.rollup import rollup_observations, rollup_pages
+from chainalytic_framework_spark.operators.registry import (
+    DEFAULT_SET,
+    downsample_with_spec,
+    rollup_with_spec,
+    rollup_with_spec_clustered,
+)
 from chainalytic_framework_spark.session import build_session
 from chainalytic_framework_spark.synth import generate_pages
 
@@ -75,16 +80,17 @@ def main() -> int:
     spark = build_session(master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     pages = generate_pages(spark, 20000)
-    from chainalytic_framework_spark.operators.cascade import build_all_tiers
-
-    build_all_tiers_cache = build_all_tiers(pages, grain="lang")
+    obs = prepare_observations(pages)
 
     ok = True
     ok &= audit("filter_project (P1): pushdown into scan",
                 contract.filter_project_events(spark, sf),
                 {"max_exchanges": 0, "pushed_filters": True})
-    ok &= audit("rollup_1m: single shuffle",
-                rollup_observations(prepare_observations(pages), "1m"),
+    # the pipeline's finest-tier build: its one exchange is already the
+    # (bucket_day, url_hash group) write layout, so the aggregate and
+    # the tier write add none
+    ok &= audit("rollup_1m clustered: one exchange, already the write layout",
+                rollup_with_spec_clustered(obs, DEFAULT_SET, "1m", 4),
                 {"max_exchanges": 1})
     ok &= audit("topk (W1): TakeOrderedAndProject, single shuffle",
                 contract.topk_users_events(spark, sf),
@@ -93,7 +99,7 @@ def main() -> int:
                 contract.join_revenue_by_nation(spark, sf),
                 {"broadcast": True})
     ok &= audit("gapfill: bounded shuffles (agg + window + join)",
-                gapfill_locf(rollup_pages(pages, "1h"), "1h"),
+                gapfill_locf(rollup_with_spec(obs, DEFAULT_SET, "1h"), "1h"),
                 {"max_exchanges": 5})
     ok &= audit("lsh pairs: bucket-keyed join, no cartesian",
                 contract.lsh_candidate_pairs_documents(spark, sf),
@@ -250,21 +256,14 @@ def main() -> int:
     # routed series: per-tier pruned scans unioned, one grain agg
     from chainalytic_framework_spark.operators.router import read_routed_series
 
-    tier_dfs = {t: build_all_tiers_cache[t] for t in build_all_tiers_cache}
+    lang = ("lang",)
+    lang_tiers = {"1m": rollup_with_spec(obs, DEFAULT_SET, "1m", keys=lang)}
+    for child, parent in DEFAULT_SET.cascade_pairs():
+        lang_tiers[child] = downsample_with_spec(lang_tiers[parent], DEFAULT_SET, child, keys=lang)
     ok &= audit("routed series: pruned per-tier branches + one grain agg",
-                read_routed_series(tier_dfs, 1704067200, 1704240000, "1h",
-                                   keys=("lang",)),
+                read_routed_series(lang_tiers, 1704067200, 1704240000, "1h",
+                                   keys=lang),
                 {"max_exchanges": 4})
-
-    # z-order write key must be pure codegen (no UDF, no exchange of its own)
-    from chainalytic_framework_spark.operators.zorder import zorder_key
-
-    zdf = pages.select(zorder_key([F.pmod(F.xxhash64("url"), F.lit(256)),
-                                   F.dayofyear("warc_ts")], bits=8).alias("z"))
-    zplan = zdf._jdf.queryExecution().executedPlan().toString()
-    z_ok = "Exchange" not in zplan and "BatchEvalPython" not in zplan
-    print(("OK " if z_ok else "BAD") + " zorder key: codegen expressions, zero shuffles")
-    ok &= z_ok
 
     # round-5 additions
     # 4 exchanges: batch agg + edge agg + the edge fixture's replay-dedup

@@ -1,7 +1,8 @@
 """End-to-end ``spark-submit --py-files`` smoke: the north rule's launch
 path, exercised for real — package the engine as a zip, submit a driver
-that can ONLY see the engine through that zip, run the synth→tiers
-pipeline, and verify tier row counts round-trip.
+that can ONLY see the engine through that zip, run ``run_pipeline``
+from synthetic pages into a scratch warehouse, and verify the stored
+tier row counts and the 1h gap-fill.
 
 This is the deployment contract a multi-executor cluster uses
 (tests/test_pyfiles_zip.py guards zipimport-cleanliness statically;
@@ -25,12 +26,14 @@ PKG = "chainalytic_framework_spark"
 
 DRIVER = """
 import json
+import os
 from pyspark.sql import SparkSession
 
 # the engine is importable ONLY via --py-files (cwd is a scratch dir)
 from chainalytic_framework_spark.synth import generate_pages
-from chainalytic_framework_spark.operators.cascade import build_all_tiers
 from chainalytic_framework_spark.operators.gapfill import gapfill_locf
+from chainalytic_framework_spark.plans.pipeline import run_pipeline
+from chainalytic_framework_spark.tables import TableStore
 
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.sql.shuffle.partitions", "8")
@@ -38,9 +41,10 @@ spark = (SparkSession.builder.master("local[4]")
          .appName("cfs-submit-smoke").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 pages = generate_pages(spark, 20000)
-tiers = build_all_tiers(pages)  # url grain: the pipeline default
-counts = {name: df.count() for name, df in tiers.items()}
-filled = gapfill_locf(tiers["1h"], "1h").count()
+store = TableStore(spark, os.path.abspath("wh"))
+run_pipeline(spark, pages, store)
+counts = {t: store.read("tier_" + t).count() for t in ("1m", "1h", "1d", "30d")}
+filled = gapfill_locf(store.read("tier_1h"), "1h").count()
 print("SMOKE_RESULT " + json.dumps({"tiers": counts, "gapfill_1h_rows": filled}))
 spark.stop()
 """
