@@ -91,101 +91,105 @@ def _cmd_query(args: argparse.Namespace) -> None:
         df.write.mode("overwrite").parquet(args.out)
         print(json.dumps({"query": args.name, "out": args.out}))
     else:
-        rows = df.limit(args.limit).collect()
-        print(json.dumps({"query": args.name, "rows": [r.asDict() for r in rows]},
-                         default=str))
+        _emit(args, df, None, query=args.name)
 
 
-def _retention_check_args(args: argparse.Namespace):
-    """(horizons, now_epoch) for the routed-read retention validation —
-    shared by ALL serve commands so none can silently read a range whose
-    fine-tier segments were already expired (ADVICE r2/r4): serve-range
-    and serve-quantile fail loudly, and serve-forecast must too, else
-    expired buckets enter the Holt fit as zeros and skew the forecast
-    with no error."""
+def _fail(msg: str) -> None:
+    """Print ``{"error": msg}`` and exit 2."""
+    print(json.dumps({"error": msg}))
+    raise SystemExit(2)
+
+
+_FAMILY_HINT = {
+    "tier": "",
+    "hist": " (run with --with-histograms)",
+    "sketch": " (run with --with-sketches)",
+}
+
+
+def _frames(args: argparse.Namespace, family: str) -> dict:
+    """The serve preamble: ``{tier: DataFrame}`` of ``family`` in
+    ``--warehouse``, the live stream edge riding in as the finest tier
+    (``streaming.stream.serve_frames``). A warehouse with none of the
+    family's tables prints an error and exits 2."""
+    from .session import get_active_or_build
+    from .streaming.stream import serve_frames
+    from .tables import TableStore
+
+    spark = get_active_or_build(app_name=f"cfs-{args.cmd}")
+    frames = serve_frames(TableStore(spark, args.warehouse), family)
+    if not frames:
+        _fail(f"no {family}_* tables in warehouse{_FAMILY_HINT[family]}")
+    return frames
+
+
+def _keys(args: argparse.Namespace) -> list:
+    return args.keys.split(",")
+
+
+def _retention(args: argparse.Namespace) -> dict:
+    """Routed-read retention validation kwargs — shared by every serve
+    command so none can silently read a range whose fine-tier segments
+    were already expired (ADVICE r2/r4): a forecast, say, would
+    otherwise fit expired buckets as zeros with no error."""
     if not args.retention_now:
-        return None, None
+        return {}
     from .operators.retention import DEFAULT_HORIZONS, _to_epoch
 
-    return DEFAULT_HORIZONS, _to_epoch(dt.datetime.fromisoformat(args.retention_now))
+    return {"retention_horizons": DEFAULT_HORIZONS,
+            "now_epoch": _to_epoch(dt.datetime.fromisoformat(args.retention_now))}
 
 
-def _load_tier_dfs(store):
-    """Numeric tier frames for a routed read, with the live streaming
-    edge riding in as the finest tier (per-bucket batch-wins) when a
-    stream log exists — shared by every serve command so tier discovery
-    has exactly one definition."""
-    from .operators.bucketing import TIER_ORDER
+def _routed_series(args: argparse.Namespace, t0: int, t1: int):
+    """The tier family's routed per-key series of ``--measure`` at
+    ``--grain`` over [t0, t1): coarse tiers for deep history, fine ones
+    at the ragged edges, as (keys..., t epoch seconds, v) longs."""
+    from pyspark.sql import functions as F
 
-    tier_dfs = {
-        t: store.read(f"tier_{t}") for t in TIER_ORDER
-        if store.exists(f"tier_{t}")
-    }
-    if store.exists("tier_1m_stream"):
-        from .streaming.stream import serve_tier
+    from .operators.router import read_routed_series
 
-        tier_dfs["1m"] = serve_tier(store, "1m")
-    return tier_dfs
+    keys = _keys(args)
+    return read_routed_series(
+        _frames(args, "tier"), t0, t1, args.grain, measure=args.measure,
+        keys=keys, **_retention(args),
+    ).select(*keys, F.col("bucket_start").cast("long").alias("t"),
+             F.col(args.measure).cast("long").alias("v"))
 
+
+def _emit(args: argparse.Namespace, df, order, **echo) -> None:
+    """Print one JSON line: ``echo`` then ``rows``, the first
+    ``--limit`` rows of ``df`` in ``order`` (None: as ``df`` yields
+    them)."""
+    if order is not None:
+        df = df.orderBy(*order)
+    if getattr(args, "limit", None) is not None:
+        df = df.limit(args.limit)
+    print(json.dumps({**echo, "rows": [r.asDict() for r in df.collect()]},
+                     default=str))
 
 
 def _cmd_serve_range(args: argparse.Namespace) -> None:
-    """Tier-routed range read over a warehouse written by `run`."""
+    """Tier-routed range read over a warehouse written by `run`; comma-
+    separated measures read every tier segment ONCE."""
     from .operators.router import read_routed
-    from .session import get_active_or_build
-    from .tables import TableStore
 
-    spark = get_active_or_build(app_name="cfs-serve")
-    store = TableStore(spark, args.warehouse)
-    # live streaming edge rides in as part of the finest tier
-    # (per-bucket batch-wins — serve_quantile does the same via
-    # serve_distribution)
-    tiers = _load_tier_dfs(store)
-    # validate the cover against the retention policy so a range whose
-    # fine-tier segments were already expired fails loudly instead of
-    # silently undercounting (ADVICE r2)
-    horizons, now_epoch = _retention_check_args(args)
-    # comma-separated measures read every tier segment ONCE
     measures = tuple(args.measure.split(","))
-    df = read_routed(tiers, args.t0, args.t1,
+    df = read_routed(_frames(args, "tier"), args.t0, args.t1,
                      measure=measures[0] if len(measures) == 1 else measures,
-                     keys=tuple(args.keys.split(",")),
-                     retention_horizons=horizons, now_epoch=now_epoch)
-    rows = df.limit(args.limit).collect()
-    print(json.dumps({"t0": args.t0, "t1": args.t1, "measure": args.measure,
-                      "rows": [r.asDict() for r in rows]}, default=str))
+                     keys=_keys(args), **_retention(args))
+    _emit(args, df, None, t0=args.t0, t1=args.t1, measure=args.measure)
 
 
 def _cmd_serve_quantile(args: argparse.Namespace) -> None:
     """Routed quantile over the stored histogram tiers of a warehouse
     written by `run --with-histograms`."""
     from .operators.router import read_routed_quantile
-    from .session import get_active_or_build
-    from .tables import TableStore
 
-    spark = get_active_or_build(app_name="cfs-serve-q")
-    store = TableStore(spark, args.warehouse)
-    hists = {t: store.read(f"hist_{t}") for t in ("1m", "1h", "1d", "30d")
-             if store.exists(f"hist_{t}")}
-    # include the streaming edge when a partial log exists: the merged
-    # history+edge read drops in as the finest routed tier
-    if store.exists("hist_1m_stream"):
-        from .streaming.stream import serve_distribution
-
-        hists["1m"] = serve_distribution(store, series_cols=("lang",))
-    if not hists:
-        print(json.dumps({"error": "no hist_* tiers in warehouse "
-                                   "(run with --with-histograms)"}))
-        raise SystemExit(2)
-    horizons, now_epoch = _retention_check_args(args)
     df = read_routed_quantile(
-        hists, args.t0, args.t1, series_cols=tuple(args.keys.split(",")),
-        q_x100=args.q, out_col="q_lo",
-        retention_horizons=horizons, now_epoch=now_epoch,
+        _frames(args, "hist"), args.t0, args.t1, series_cols=_keys(args),
+        q_x100=args.q, out_col="q_lo", **_retention(args),
     )
-    rows = df.limit(args.limit).collect()
-    print(json.dumps({"t0": args.t0, "t1": args.t1, "q": args.q,
-                      "rows": [r.asDict() for r in rows]}, default=str))
+    _emit(args, df, None, t0=args.t0, t1=args.t1, q=args.q)
 
 
 def _cmd_stream(args: argparse.Namespace) -> None:
@@ -194,8 +198,7 @@ def _cmd_stream(args: argparse.Namespace) -> None:
     form of the streaming edge: run it on a schedule between batch
     pipeline increments."""
     from .streaming.stream import (
-        compact_hist_stream_into_batch,
-        compact_stream_into_batch,
+        compact_edge,
         start_heavyhitter_stream_to_store,
         start_histogram_stream_to_store,
         start_stream_to_store,
@@ -205,23 +208,20 @@ def _cmd_stream(args: argparse.Namespace) -> None:
 
     spark = get_active_or_build(app_name="cfs-stream")
     store = TableStore(spark, args.warehouse)
-    q = start_stream_to_store(
+    start_stream_to_store(
         spark, args.input, store, checkpoint_dir=args.checkpoint + "/tier",
         trigger_available_now=True, with_sketches=args.with_sketches,
-    )
-    q.awaitTermination()
+    ).awaitTermination()
     if args.with_histograms:
-        qh = start_histogram_stream_to_store(
+        start_histogram_stream_to_store(
             spark, args.input, store, checkpoint_dir=args.checkpoint + "/hist",
             trigger_available_now=True,
-        )
-        qh.awaitTermination()
+        ).awaitTermination()
     if args.with_heavyhitters:
-        qq = start_heavyhitter_stream_to_store(
+        start_heavyhitter_stream_to_store(
             spark, args.input, store, checkpoint_dir=args.checkpoint + "/hh",
             trigger_available_now=True,
-        )
-        qq.awaitTermination()
+        ).awaitTermination()
     result = {"drained": True}
     if args.compact_closed:
         import pyspark.sql.functions as F
@@ -229,11 +229,11 @@ def _cmd_stream(args: argparse.Namespace) -> None:
         wm = store.read("tier_1m_stream").agg(F.max("bucket_day")).first()[0] \
             if store.exists("tier_1m_stream") else None
         result["compacted_tier_days"] = [
-            str(d) for d in compact_stream_into_batch(store, closed_before=wm)
+            str(d) for d in compact_edge(store, "tier", closed_before=wm)
         ]
         if args.with_histograms and store.exists("hist_1m_stream"):
             result["compacted_hist_days"] = [
-                str(d) for d in compact_hist_stream_into_batch(store, closed_before=wm)
+                str(d) for d in compact_edge(store, "hist", closed_before=wm)
             ]
     print(json.dumps(result))
 
@@ -274,7 +274,7 @@ def _cmd_forecast(args: argparse.Namespace) -> None:
         from .operators.gapfill import gapfill_locf
 
         tier = gapfill_locf(tier, args.tier)
-    keys = args.keys.split(",")
+    keys = _keys(args)
     # collapse to the requested key grain (tier tables are url grain):
     # one row per (keys, bucket)
     tier = tier.groupBy(*keys, "bucket_start").agg(
@@ -287,10 +287,8 @@ def _cmd_forecast(args: argparse.Namespace) -> None:
         alpha=args.alpha, beta=args.beta,
         gamma=args.gamma, period=args.period, horizon=args.horizon,
     )
-    rows = df.orderBy(*args.keys.split(","), "step").limit(args.limit).collect()
-    print(json.dumps({"tier": args.tier, "measure": args.measure,
-                      "horizon": args.horizon,
-                      "rows": [r.asDict() for r in rows]}, default=str))
+    _emit(args, df, [*keys, "step"], tier=args.tier, measure=args.measure,
+          horizon=args.horizon)
 
 
 def _cmd_serve_forecast(args: argparse.Namespace) -> None:
@@ -300,37 +298,24 @@ def _cmd_serve_forecast(args: argparse.Namespace) -> None:
     the forecast grain — same fit as the direct-tier ``forecast``
     command on identical data (parity-tested), radically fewer rows
     scanned over long windows."""
-    from pyspark.sql import functions as F  # noqa: F401 (spine helper)
+    from pyspark.sql import functions as F
 
-    from .operators.bucketing import TIER_ORDER
     from .operators.forecast import holt_forecast
-    from .operators.router import read_routed_series
-    from .session import get_active_or_build
-    from .tables import TableStore
 
-    spark = get_active_or_build(app_name="cfs-serve-forecast")
-    store = TableStore(spark, args.warehouse)
-    tier_dfs = _load_tier_dfs(store)
-    keys = args.keys.split(",")
-    horizons, now_epoch = _retention_check_args(args)
-    series = read_routed_series(
-        tier_dfs, args.t0, args.t1, args.grain,
-        measure=args.measure, keys=tuple(keys),
-        retention_horizons=horizons, now_epoch=now_epoch,
+    keys = _keys(args)
+    series = _routed_series(args, args.t0, args.t1).select(
+        *keys, F.col("t").cast("timestamp").alias("bucket_start"),
+        F.col("v").alias(args.measure),
     )
-    # routed series collapse to the requested key grain already (tier
-    # tables are url grain -> aggregate over urls happened in the router)
     if args.zero_fill:
         series = _zero_fill_spine(series, keys, args.measure, args.grain)
     df = holt_forecast(
-        series, key_cols=tuple(keys), value_col=args.measure,
+        series, key_cols=keys, value_col=args.measure,
         alpha=args.alpha, beta=args.beta,
         gamma=args.gamma, period=args.period, horizon=args.horizon,
     )
-    rows = df.orderBy(*keys, "step").limit(args.limit).collect()
-    print(json.dumps({"grain": args.grain, "measure": args.measure,
-                      "t0": args.t0, "t1": args.t1, "horizon": args.horizon,
-                      "rows": [r.asDict() for r in rows]}, default=str))
+    _emit(args, df, [*keys, "step"], grain=args.grain, measure=args.measure,
+          t0=args.t0, t1=args.t1, horizon=args.horizon)
 
 
 def _cmd_cold(args: argparse.Namespace) -> None:
@@ -361,28 +346,11 @@ def _cmd_serve_chart(args: argparse.Namespace) -> None:
     clamped to the grain). A 2-year dashboard pane reads coarse tiers
     for deep history and ships ~npoints rows per series to the client,
     never 10⁶ buckets."""
-    from pyspark.sql import functions as F
-
-    from .operators.bucketing import SECONDS, TIER_ORDER
+    from .operators.bucketing import SECONDS
     from .operators.lttb import lttb_downsample_exact, m4_downsample
-    from .operators.router import read_routed_series
-    from .session import get_active_or_build
-    from .tables import TableStore
 
-    spark = get_active_or_build(app_name="cfs-serve-chart")
-    store = TableStore(spark, args.warehouse)
-    tier_dfs = _load_tier_dfs(store)
-    keys = args.keys.split(",")
-    horizons, now_epoch = _retention_check_args(args)
-    series = read_routed_series(
-        tier_dfs, args.t0, args.t1, args.grain,
-        measure=args.measure, keys=tuple(keys),
-        retention_horizons=horizons, now_epoch=now_epoch,
-    ).select(
-        *keys,
-        F.col("bucket_start").cast("long").alias("t"),
-        F.col(args.measure).cast("long").alias("v"),
-    )
+    keys = _keys(args)
+    series = _routed_series(args, args.t0, args.t1)
     if args.method == "m4":
         # pixel width: the range split across npoints/4 buckets (M4 emits
         # ≤4 points per bucket), never finer than the routed grain
@@ -394,12 +362,8 @@ def _cmd_serve_chart(args: argparse.Namespace) -> None:
                             origin=args.t0)
     else:
         out = lttb_downsample_exact(series, keys, "t", "v", args.npoints)
-    rows = out.orderBy(*keys, "t").limit(args.limit).collect()
-    print(json.dumps({"grain": args.grain, "measure": args.measure,
-                      "t0": args.t0, "t1": args.t1, "npoints": args.npoints,
-                      "method": args.method,
-                      "rows": [r.asDict() for r in rows]}, default=str))
-
+    _emit(args, out, [*keys, "t"], grain=args.grain, measure=args.measure,
+          t0=args.t0, t1=args.t1, npoints=args.npoints, method=args.method)
 
 
 def _cmd_crawl_plan(args: argparse.Namespace) -> None:
@@ -420,9 +384,7 @@ def _cmd_crawl_plan(args: argparse.Namespace) -> None:
     spark = get_active_or_build(app_name="cfs-crawl-plan")
     store = TableStore(spark, args.warehouse)
     if not store.exists(FOLD_TABLE):
-        print(json.dumps({"error": f"no {FOLD_TABLE} table in warehouse "
-                                   "(run without --no-fold first)"}))
-        raise SystemExit(2)
+        _fail(f"no {FOLD_TABLE} table in warehouse (run without --no-fold first)")
     ev = store.read(FOLD_TABLE).select(
         "url",
         F.col("warc_ts").cast("timestamp").cast("long").alias("t"),
@@ -459,16 +421,12 @@ def _cmd_crawl_plan(args: argparse.Namespace) -> None:
             F.max("delay_seconds").alias("max_delay_seconds"),
             F.sum((F.col("delay_seconds") > 0).cast("long")).alias("n_delayed"),
         ).collect()[0]
-        rows = plan.orderBy("fetch_epoch", "url").limit(args.limit).collect()
+        _emit(args, plan, ["fetch_epoch", "url"], gap_seconds=args.gap,
+              n_urls=totals["n_urls"], n_delayed=totals["n_delayed"],
+              n_deferred=n_deferred, budget=args.budget,
+              max_delay_seconds=totals["max_delay_seconds"])
     finally:
         plan.unpersist()
-    print(json.dumps({"gap_seconds": args.gap,
-                      "n_urls": totals["n_urls"],
-                      "n_delayed": totals["n_delayed"],
-                      "n_deferred": n_deferred,
-                      "budget": args.budget,
-                      "max_delay_seconds": totals["max_delay_seconds"],
-                      "rows": [r.asDict() for r in rows]}, default=str))
 
 
 def _cmd_serve_trending(args: argparse.Namespace) -> None:
@@ -482,31 +440,14 @@ def _cmd_serve_trending(args: argparse.Namespace) -> None:
     from pyspark.sql import functions as F
 
     from .operators.decay import trending_topk
-    from .operators.router import read_routed_series
-    from .session import get_active_or_build
-    from .tables import TableStore
 
-    spark = get_active_or_build(app_name="cfs-serve-trending")
-    store = TableStore(spark, args.warehouse)
-    tier_dfs = _load_tier_dfs(store)
-    keys = args.keys.split(",")
-    horizons, now_epoch = _retention_check_args(args)
-    series = read_routed_series(
-        tier_dfs, args.t0, args.t1, args.grain,
-        measure=args.measure, keys=tuple(keys),
-        retention_horizons=horizons, now_epoch=now_epoch,
-    )
     df = trending_topk(
-        series, keys,
-        F.col("bucket_start").cast("timestamp").cast("long"),
+        _routed_series(args, args.t0, args.t1), _keys(args), F.col("t"),
         t_ref=args.t1, half_life_s=args.half_life, k=args.k,
-        weight=F.col(args.measure).cast("double"),
+        weight=F.col("v").cast("double"),
     )
-    rows = df.collect()
-    print(json.dumps({"grain": args.grain, "measure": args.measure,
-                      "t0": args.t0, "t1": args.t1,
-                      "half_life": args.half_life,
-                      "rows": [r.asDict() for r in rows]}, default=str))
+    _emit(args, df, None, grain=args.grain, measure=args.measure,
+          t0=args.t0, t1=args.t1, half_life=args.half_life)
 
 
 def _cmd_serve_sax(args: argparse.Namespace) -> None:
@@ -518,27 +459,11 @@ def _cmd_serve_sax(args: argparse.Namespace) -> None:
     word-keyed join, never an all-pairs scan."""
     from pyspark.sql import functions as F
 
-    from .operators.bucketing import TIER_ORDER
-    from .operators.router import read_routed_series
     from .operators.sax import paa_segments, sax_words
-    from .session import get_active_or_build
-    from .tables import TableStore
 
-    spark = get_active_or_build(app_name="cfs-serve-sax")
-    store = TableStore(spark, args.warehouse)
-    tier_dfs = _load_tier_dfs(store)
-    keys = args.keys.split(",")
-    horizons, now_epoch = _retention_check_args(args)
-    series = read_routed_series(
-        tier_dfs, args.t0, args.t1, args.grain,
-        measure=args.measure, keys=tuple(keys),
-        retention_horizons=horizons, now_epoch=now_epoch,
-    ).select(
-        *keys,
-        F.col("bucket_start").cast("long").alias("t"),
-        F.col(args.measure).cast("long").alias("v"),
-    )
-    paa = paa_segments(series, keys, "t", "v", n_segments=args.segments)
+    keys = _keys(args)
+    paa = paa_segments(_routed_series(args, args.t0, args.t1), keys, "t", "v",
+                       n_segments=args.segments)
     words = sax_words(paa, keys, alphabet=args.alphabet)
     if args.like is not None:
         # resolve the reference word(s) driver-side: one persisted plan
@@ -554,16 +479,11 @@ def _cmd_serve_sax(args: argparse.Namespace) -> None:
             .select("word").distinct().collect()
         ]
         if not ref_words:
-            print(json.dumps({"error": f"--like key {args.like!r} has no "
-                                       f"series in [t0, t1)"}))
-            raise SystemExit(2)
+            _fail(f"--like key {args.like!r} has no series in [t0, t1)")
         words = words.where(F.col("word").isin(ref_words))
-    rows = words.orderBy("word", *keys).limit(args.limit).collect()
-    print(json.dumps({"grain": args.grain, "measure": args.measure,
-                      "t0": args.t0, "t1": args.t1,
-                      "segments": args.segments, "alphabet": args.alphabet,
-                      "like": args.like,
-                      "rows": [r.asDict() for r in rows]}, default=str))
+    _emit(args, words, ["word", *keys], grain=args.grain, measure=args.measure,
+          t0=args.t0, t1=args.t1, segments=args.segments,
+          alphabet=args.alphabet, like=args.like)
 
 
 def _cmd_serve_trend(args: argparse.Namespace) -> None:
@@ -577,35 +497,18 @@ def _cmd_serve_trend(args: argparse.Namespace) -> None:
     stay far inside decimal(38,0) at any range length."""
     from pyspark.sql import functions as F
 
-    from .operators.bucketing import SECONDS, TIER_ORDER
-    from .operators.router import read_routed_series
+    from .operators.bucketing import SECONDS
     from .operators.trend import changepoint, linfit, max_drawdown, theil_sen
-    from .session import get_active_or_build
-    from .tables import TableStore
 
-    spark = get_active_or_build(app_name="cfs-serve-trend")
-    store = TableStore(spark, args.warehouse)
-    tier_dfs = _load_tier_dfs(store)
-    keys = args.keys.split(",")
-    horizons, now_epoch = _retention_check_args(args)
-    series = read_routed_series(
-        tier_dfs, args.t0, args.t1, args.grain,
-        measure=args.measure, keys=tuple(keys),
-        retention_horizons=horizons, now_epoch=now_epoch,
-    ).select(
-        *keys,
-        F.col("bucket_start").cast("long").alias("b"),
-        F.col(args.measure).cast("long").alias("v"),
-    )
-    step = SECONDS[args.grain]
+    keys = _keys(args)
     # one routed read feeds all three aggregates (don't re-scan per stat)
-    series = series.persist()
+    series = _routed_series(args, args.t0, args.t1).persist()
     try:
         pts = series.withColumn(
-            "x", ((F.col("b") - F.lit(args.t0)) / step).cast("long")
+            "x", ((F.col("t") - F.lit(args.t0)) / SECONDS[args.grain]).cast("long")
         )
         fit = linfit(pts, keys, "x", "v")
-        if getattr(args, "robust", False):
+        if args.robust:
             # Theil-Sen median slope + Mann-Kendall S: one outlier bucket
             # moves the estimate one rank where least squares chases it;
             # pair frame is quadratic in the ROUTED series length (already
@@ -614,25 +517,19 @@ def _cmd_serve_trend(args: argparse.Namespace) -> None:
                 "slope_x1e4", "robust_slope_x1e4"
             )
             fit = fit.join(rob, keys, "left")
-        cp = changepoint(series, keys, "b", "v")
-        dd = max_drawdown(series, keys, "b", "v")
+        cp = changepoint(series, keys, "t", "v")
+        dd = max_drawdown(series, keys, "t", "v")
         # LEFT joins: a single-bucket series has a fit row but no
         # changepoint row (its k<n filter is empty) — the sparse/new
         # series a monitor most needs must still appear
         out = fit.join(cp, keys, "left").join(dd.drop("n_buckets"), keys, "left")
-        if getattr(args, "movers", False):
-            # top movers: steepest |slope| first (TakeOrderedAndProject;
-            # key tiebreak keeps the cut deterministic)
-            order = [F.abs(F.col("slope_x1e4")).desc(), *keys]
-        else:
-            order = list(keys)
-        rows = out.orderBy(*order).limit(args.limit).collect()
+        # --movers: steepest |slope| first (TakeOrderedAndProject; key
+        # tiebreak keeps the cut deterministic)
+        order = [F.abs(F.col("slope_x1e4")).desc(), *keys] if args.movers else keys
+        _emit(args, out, order, grain=args.grain, measure=args.measure,
+              t0=args.t0, t1=args.t1)
     finally:
         series.unpersist()
-    print(json.dumps({"grain": args.grain, "measure": args.measure,
-                      "t0": args.t0, "t1": args.t1,
-                      "rows": [r.asDict() for r in rows]}, default=str))
-
 
 
 def _cmd_serve_alerts(args: argparse.Namespace) -> None:
@@ -643,33 +540,13 @@ def _cmd_serve_alerts(args: argparse.Namespace) -> None:
     history evaluates from coarse tiers and the ragged edge from fine
     ones. Integer thresholds on integer measures: the episode set is
     byte-identical at any parallelism."""
-    from pyspark.sql import functions as F
-
-    from .operators.router import read_routed_series
     from .operators.states import alert_episodes
-    from .session import get_active_or_build
-    from .tables import TableStore
 
-    spark = get_active_or_build(app_name="cfs-serve-alerts")
-    store = TableStore(spark, args.warehouse)
-    tier_dfs = _load_tier_dfs(store)
-    keys = args.keys.split(",")
-    horizons, now_epoch = _retention_check_args(args)
-    series = read_routed_series(
-        tier_dfs, args.t0, args.t1, args.grain,
-        measure=args.measure, keys=tuple(keys),
-        retention_horizons=horizons, now_epoch=now_epoch,
-    ).select(
-        *keys,
-        F.col("bucket_start").cast("long").alias("b"),
-        F.col(args.measure).cast("long").alias("v"),
-    )
-    eps = alert_episodes(series, keys, "b", "v", hi=args.hi, lo=args.lo)
-    rows = eps.orderBy(*keys, "episode").limit(args.limit).collect()
-    print(json.dumps({"grain": args.grain, "measure": args.measure,
-                      "t0": args.t0, "t1": args.t1,
-                      "hi": args.hi, "lo": args.lo,
-                      "rows": [r.asDict() for r in rows]}, default=str))
+    keys = _keys(args)
+    eps = alert_episodes(_routed_series(args, args.t0, args.t1), keys, "t", "v",
+                         hi=args.hi, lo=args.lo)
+    _emit(args, eps, [*keys, "episode"], grain=args.grain, measure=args.measure,
+          t0=args.t0, t1=args.t1, hi=args.hi, lo=args.lo)
 
 
 def _cmd_serve_coverage(args: argparse.Namespace) -> None:
@@ -680,23 +557,18 @@ def _cmd_serve_coverage(args: argparse.Namespace) -> None:
     (operators/states.py::tier_coverage over the STORED tier frame:
     tier rows ARE the grid observations, so coverage is read straight
     off the tier, no raw-event scan). The streaming edge rides in as
-    the finest tier (same _load_tier_dfs composition as every other
-    serve command), so 'present' includes not-yet-compacted buckets."""
+    the finest tier (``_frames``, as for every other serve command),
+    so 'present' includes not-yet-compacted buckets."""
     from pyspark.sql import functions as F
 
     from .operators.bucketing import SECONDS
     from .operators.states import tier_coverage
-    from .session import get_active_or_build
-    from .tables import TableStore
 
-    spark = get_active_or_build(app_name="cfs-serve-cov")
-    store = TableStore(spark, args.warehouse)
-    tier_dfs = _load_tier_dfs(store)
-    if args.grain not in tier_dfs:
-        print(json.dumps({"error": f"no tier_{args.grain} in warehouse"}))
-        return
-    keys = args.keys.split(",")
-    tier = tier_dfs[args.grain]
+    frames = _frames(args, "tier")
+    if args.grain not in frames:
+        _fail(f"no tier_{args.grain} in warehouse")
+    keys = _keys(args)
+    tier = frames[args.grain]
     tier_secs = SECONDS[args.grain]
     # SLA period: the day grid for sub-day tiers; one bucket for
     # coarser tiers (presence/absence per window — tier_coverage
@@ -717,45 +589,23 @@ def _cmd_serve_coverage(args: argparse.Namespace) -> None:
                         "bucket_start", tier_secs=tier_secs,
                         day_secs=period)
     # worst days first: the SLA reader wants the holes, not the 100%s
-    rows = (cov.orderBy(F.col("coverage_x1e4").asc(),
-                        F.col("day_epoch").asc(), *keys)
-            .limit(args.limit).collect())
-    print(json.dumps({"grain": args.grain, "keys": args.keys,
-                      "rows": [r.asDict() for r in rows]}, default=str))
+    _emit(args, cov, [F.col("coverage_x1e4").asc(), F.col("day_epoch").asc(), *keys],
+          grain=args.grain, keys=args.keys)
 
 
 def _cmd_serve_drift(args: argparse.Namespace) -> None:
     """Distribution-drift endpoint: PSI between two routed ranges,
     answered from the stored hist_* tiers (counts are additive, so no
-    raw scan); streaming histogram edge rides in as the finest tier
-    when present — same composition as serve-quantile."""
-    from .operators.bucketing import TIER_ORDER
+    raw scan); the streaming histogram edge rides in as the finest
+    tier when present."""
     from .operators.router import read_routed_drift
-    from .session import get_active_or_build
-    from .tables import TableStore
 
-    spark = get_active_or_build(app_name="cfs-serve-drift")
-    store = TableStore(spark, args.warehouse)
-    hists = {t: store.read(f"hist_{t}") for t in TIER_ORDER
-             if store.exists(f"hist_{t}")}
-    if store.exists("hist_1m_stream"):
-        from .streaming.stream import serve_distribution
-
-        hists["1m"] = serve_distribution(store, series_cols=tuple(args.keys.split(",")))
-    if not hists:
-        print(json.dumps({"error": "no hist_* tiers in warehouse "
-                                   "(run with --with-histograms)"}))
-        raise SystemExit(2)
-    keys = args.keys.split(",")
-    horizons, now_epoch = _retention_check_args(args)
+    keys = _keys(args)
     out = read_routed_drift(
-        hists, args.a0, args.a1, args.b0, args.b1,
-        series_cols=tuple(keys),
-        retention_horizons=horizons, now_epoch=now_epoch,
+        _frames(args, "hist"), args.a0, args.a1, args.b0, args.b1,
+        series_cols=keys, **_retention(args),
     )
-    rows = out.orderBy(*keys).limit(args.limit).collect()
-    print(json.dumps({"a": [args.a0, args.a1], "b": [args.b0, args.b1],
-                      "rows": [r.asDict() for r in rows]}, default=str))
+    _emit(args, out, keys, a=[args.a0, args.a1], b=[args.b0, args.b1])
 
 
 def _cmd_serve_contribution(args: argparse.Namespace) -> None:
@@ -768,9 +618,6 @@ def _cmd_serve_contribution(args: argparse.Namespace) -> None:
     from pyspark.sql import functions as F
 
     from .operators.contribution import contribution
-    from .operators.router import read_routed_series
-    from .session import get_active_or_build
-    from .tables import TableStore
 
     if max(args.a0, args.b0) < min(args.a1, args.b1):
         # each routed read returns exactly its requested range; with
@@ -778,62 +625,54 @@ def _cmd_serve_contribution(args: argparse.Namespace) -> None:
         # and both conditional sums would double-count them
         raise SystemExit("serve-contribution: ranges A and B must be "
                          "disjoint")
-    spark = get_active_or_build(app_name="cfs-serve-contribution")
-    store = TableStore(spark, args.warehouse)
-    tier_dfs = _load_tier_dfs(store)
-    keys = args.keys.split(",")
-    horizons, now_epoch = _retention_check_args(args)
-    parts = []
-    for t0, t1 in ((args.a0, args.a1), (args.b0, args.b1)):
-        parts.append(
-            read_routed_series(
-                tier_dfs, t0, t1, args.grain,
-                measure=args.measure, keys=tuple(keys),
-                retention_horizons=horizons, now_epoch=now_epoch,
-            ).select(
-                *keys,
-                F.col("bucket_start").cast("long").alias("b"),
-                F.col(args.measure).cast("long").alias("v"),
-            )
-        )
-    both = parts[0].unionByName(parts[1])
-    out = contribution(
-        both, keys, "b", "v", args.a0, args.a1, args.b0, args.b1
-    )
-    rows = (
-        out.orderBy(F.abs(F.col("delta")).desc(), *keys)
-        .limit(args.limit)
-        .collect()
-    )
-    print(json.dumps({"a": [args.a0, args.a1], "b": [args.b0, args.b1],
-                      "grain": args.grain, "measure": args.measure,
-                      "rows": [r.asDict() for r in rows]}, default=str))
+    keys = _keys(args)
+    both = _routed_series(args, args.a0, args.a1).unionByName(
+        _routed_series(args, args.b0, args.b1))
+    out = contribution(both, keys, "t", "v", args.a0, args.a1, args.b0, args.b1)
+    _emit(args, out, [F.abs(F.col("delta")).desc(), *keys],
+          a=[args.a0, args.a1], b=[args.b0, args.b1],
+          grain=args.grain, measure=args.measure)
 
 
 def _cmd_serve_distinct(args: argparse.Namespace) -> None:
     """Routed distinct-count estimates from the stored HLL sketch tiers
     (history + streaming sketch edge as the finest tier when present)."""
-    from .operators.bucketing import TIER_ORDER
     from .operators.router import read_routed_distinct
-    from .session import get_active_or_build
-    from .tables import TableStore
 
-    spark = get_active_or_build(app_name="cfs-serve-d")
-    store = TableStore(spark, args.warehouse)
-    sk = {t: store.read(f"sketch_{t}") for t in TIER_ORDER
-          if store.exists(f"sketch_{t}")}
-    if store.exists("sketch_1m_stream"):
-        from .streaming.stream import serve_distinct
+    df = read_routed_distinct(_frames(args, "sketch"), args.t0, args.t1,
+                              keys=_keys(args), **_retention(args))
+    _emit(args, df, None, t0=args.t0, t1=args.t1)
 
-        sk["1m"] = serve_distinct(store).select("bucket_start", "lang", "url_sketch")
-    horizons, now_epoch = _retention_check_args(args)
-    df = read_routed_distinct(sk, args.t0, args.t1,
-                              keys=tuple(args.keys.split(",")),
-                              retention_horizons=horizons,
-                              now_epoch=now_epoch)
-    rows = df.limit(args.limit).collect()
-    print(json.dumps({"t0": args.t0, "t1": args.t1,
-                      "rows": [r.asDict() for r in rows]}, default=str))
+
+# The flags serve commands share, each defined once; a command names the
+# ones it takes (``_serve_parser``), and one whose default differs sets
+# it with ``set_defaults`` on its own parser.
+_SERVE_FLAGS = {
+    "warehouse": dict(required=True, help="warehouse root written by `run`"),
+    "t0": dict(type=int, required=True, help="range start, epoch secs, grain-aligned"),
+    "t1": dict(type=int, required=True, help="range end (exclusive), epoch secs"),
+    "a0": dict(type=int, required=True, help="range A start, epoch secs"),
+    "a1": dict(type=int, required=True, help="range A end (exclusive)"),
+    "b0": dict(type=int, required=True, help="range B start, epoch secs"),
+    "b1": dict(type=int, required=True, help="range B end (exclusive)"),
+    "grain": dict(default="1h", help="routed series grain (tier name)"),
+    "measure": dict(default="point_count"),
+    "keys": dict(default="lang", help="comma-separated key cols"),
+    "retention-now": dict(default=None,
+                          help="ISO datetime (UTC); fail loudly if a routed "
+                               "cover needs expired fine-tier segments"),
+    "limit": dict(type=int, default=100, help="max rows printed"),
+}
+_ROUTED = "warehouse t0 t1 grain measure keys retention-now limit"
+
+
+def _serve_parser(sub, name: str, fn, help: str, flags: str = _ROUTED,
+                  **defaults) -> argparse.ArgumentParser:
+    sp = sub.add_parser(name, help=help)
+    for f in flags.split():
+        sp.add_argument(f"--{f}", **_SERVE_FLAGS[f])
+    sp.set_defaults(fn=fn, **defaults)
+    return sp
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -874,29 +713,15 @@ def main(argv: list[str] | None = None) -> None:
     q.add_argument("--limit", type=int, default=20)
     q.set_defaults(fn=_cmd_query)
 
-    sv = sub.add_parser("serve-range",
-                        help="tier-routed range read from a warehouse")
-    sv.add_argument("--warehouse", required=True)
-    sv.add_argument("--t0", type=int, required=True, help="epoch secs, 1m-aligned")
-    sv.add_argument("--t1", type=int, required=True)
-    sv.add_argument("--measure", default="point_count")
-    sv.add_argument("--keys", default="url", help="comma-separated grain cols")
-    sv.add_argument("--limit", type=int, default=50)
-    sv.add_argument("--retention-now", default=None,
-                    help="ISO datetime (UTC): validate routed segments "
-                         "against the retention policy before reading")
-    sv.set_defaults(fn=_cmd_serve_range)
+    _serve_parser(sub, "serve-range", _cmd_serve_range,
+                  "tier-routed range read from a warehouse",
+                  "warehouse t0 t1 measure keys retention-now limit",
+                  keys="url", limit=50)
 
-    sq = sub.add_parser("serve-quantile",
-                        help="tier-routed quantile from stored histogram tiers")
-    sq.add_argument("--warehouse", required=True)
-    sq.add_argument("--t0", type=int, required=True, help="epoch secs, 1m-aligned")
-    sq.add_argument("--t1", type=int, required=True)
+    sq = _serve_parser(sub, "serve-quantile", _cmd_serve_quantile,
+                       "tier-routed quantile from stored histogram tiers",
+                       "warehouse t0 t1 keys retention-now limit", limit=50)
     sq.add_argument("--q", type=int, default=90, help="percentile (integer)")
-    sq.add_argument("--keys", default="lang", help="comma-separated series cols")
-    sq.add_argument("--limit", type=int, default=50)
-    sq.add_argument("--retention-now", default=None)
-    sq.set_defaults(fn=_cmd_serve_quantile)
 
     sm = sub.add_parser("stream", help="drain the pages stream into the warehouse")
     sm.add_argument("--input", required=True, help="pages parquet dir (file stream)")
@@ -914,39 +739,22 @@ def main(argv: list[str] | None = None) -> None:
     fc.add_argument("--tier", default="1h")
     fc.add_argument("--measure", default="point_count")
     fc.add_argument("--keys", default="lang", help="comma-separated key cols")
-    fc.add_argument("--horizon", type=int, default=12)
-    fc.add_argument("--alpha", type=float, default=0.5)
-    fc.add_argument("--beta", type=float, default=0.1)
-    fc.add_argument("--gamma", type=float, default=None)
-    fc.add_argument("--period", type=int, default=None)
     fc.add_argument("--gapfill", action="store_true",
                     help="LOCF gap-fill the tier before fitting (url grain)")
-    fc.add_argument("--zero-fill", action="store_true",
-                    help="dense per-key spine, missing buckets = 0 "
-                         "(additive count measures)")
     fc.add_argument("--limit", type=int, default=50)
+    sfc = _serve_parser(sub, "serve-forecast", _cmd_serve_forecast,
+                        "router-fed Holt(-Winters) forecast: long history "
+                        "aggregates from coarse tiers", limit=50)
+    for f in (fc, sfc):
+        f.add_argument("--horizon", type=int, default=12)
+        f.add_argument("--alpha", type=float, default=0.5)
+        f.add_argument("--beta", type=float, default=0.1)
+        f.add_argument("--gamma", type=float, default=None)
+        f.add_argument("--period", type=int, default=None)
+        f.add_argument("--zero-fill", action="store_true",
+                       help="dense per-key spine, missing buckets = 0 "
+                            "(additive count measures)")
     fc.set_defaults(fn=_cmd_forecast)
-
-    sfc = sub.add_parser("serve-forecast",
-                         help="router-fed Holt(-Winters) forecast: long "
-                              "history aggregates from coarse tiers")
-    sfc.add_argument("--warehouse", required=True)
-    sfc.add_argument("--t0", type=int, required=True, help="epoch secs, grain-aligned")
-    sfc.add_argument("--t1", type=int, required=True, help="epoch secs, grain-aligned")
-    sfc.add_argument("--grain", default="1h", help="forecast bucket grain (tier name)")
-    sfc.add_argument("--measure", default="point_count")
-    sfc.add_argument("--keys", default="lang")
-    sfc.add_argument("--horizon", type=int, default=12)
-    sfc.add_argument("--alpha", type=float, default=0.5)
-    sfc.add_argument("--beta", type=float, default=0.1)
-    sfc.add_argument("--gamma", type=float, default=None)
-    sfc.add_argument("--period", type=int, default=None)
-    sfc.add_argument("--zero-fill", action="store_true")
-    sfc.add_argument("--retention-now", default=None,
-                     help="ISO datetime; fail loudly if the routed cover "
-                          "needs expired fine-tier segments")
-    sfc.add_argument("--limit", type=int, default=50)
-    sfc.set_defaults(fn=_cmd_serve_forecast)
 
     cd = sub.add_parser("cold", help="compress-after-age: move closed tier "
                                      "days into Gorilla blob cold storage")
@@ -956,24 +764,14 @@ def main(argv: list[str] | None = None) -> None:
                     help="ISO datetime; days fully closed before this move")
     cd.set_defaults(fn=_cmd_cold)
 
-    sch = sub.add_parser("serve-chart",
-                         help="routed series decimated to n shape-preserving "
-                              "points per key (LTTB) — the dashboard pane path")
-    sch.add_argument("--warehouse", required=True)
-    sch.add_argument("--t0", type=int, required=True)
-    sch.add_argument("--t1", type=int, required=True)
-    sch.add_argument("--grain", default="1h")
-    sch.add_argument("--measure", default="point_count")
-    sch.add_argument("--keys", default="lang")
+    sch = _serve_parser(sub, "serve-chart", _cmd_serve_chart,
+                        "routed series decimated to n shape-preserving "
+                        "points per key (LTTB) — the dashboard pane path",
+                        limit=1000)
     sch.add_argument("--npoints", type=int, default=200)
     sch.add_argument("--method", choices=["lttb", "m4"], default="lttb",
                      help="lttb: shape-preserving selection; m4: exact "
                           "min/max envelope per pixel bucket")
-    sch.add_argument("--retention-now", default=None,
-                     help="ISO datetime; fail loudly if the routed cover "
-                          "needs expired fine-tier segments")
-    sch.add_argument("--limit", type=int, default=1000)
-    sch.set_defaults(fn=_cmd_serve_chart)
 
     cp = sub.add_parser("crawl-plan",
                         help="recrawl schedule + per-host politeness grid "
@@ -990,139 +788,60 @@ def main(argv: list[str] | None = None) -> None:
     cp.add_argument("--limit", type=int, default=100)
     cp.set_defaults(fn=_cmd_crawl_plan)
 
-    str_ = sub.add_parser("serve-trending",
-                          help="recency-weighted top-k keys: half-life-"
-                               "decayed activity over the routed tiers")
-    str_.add_argument("--warehouse", required=True)
-    str_.add_argument("--t0", type=int, required=True,
-                      help="epoch secs, grain-aligned")
-    str_.add_argument("--t1", type=int, required=True,
-                      help="epoch secs, grain-aligned; also the decay "
-                           "reference time T")
-    str_.add_argument("--grain", default="1h")
-    str_.add_argument("--measure", default="point_count")
-    str_.add_argument("--keys", default="lang")
+    str_ = _serve_parser(sub, "serve-trending", _cmd_serve_trending,
+                         "recency-weighted top-k keys: half-life-decayed "
+                         "activity over the routed tiers (--t1 is also the "
+                         "decay reference time)",
+                         "warehouse t0 t1 grain measure keys retention-now")
     str_.add_argument("--half-life", type=int, default=86400,
                       help="decay half-life in seconds")
     str_.add_argument("--k", type=int, default=20)
-    str_.add_argument("--retention-now", default=None,
-                      help="ISO datetime; fail loudly if the routed cover "
-                           "needs expired fine-tier segments")
-    str_.set_defaults(fn=_cmd_serve_trending)
 
-    sx = sub.add_parser("serve-sax",
-                        help="SAX shape words per key over a routed range; "
-                             "--like <key> filters to same-shaped series")
-    sx.add_argument("--warehouse", required=True)
-    sx.add_argument("--t0", type=int, required=True)
-    sx.add_argument("--t1", type=int, required=True)
-    sx.add_argument("--grain", default="1h")
-    sx.add_argument("--measure", default="point_count")
-    sx.add_argument("--keys", default="url")
+    sx = _serve_parser(sub, "serve-sax", _cmd_serve_sax,
+                       "SAX shape words per key over a routed range; "
+                       "--like <key> filters to same-shaped series", keys="url")
     sx.add_argument("--segments", type=int, default=8)
     sx.add_argument("--alphabet", type=int, default=4)
     sx.add_argument("--like", default=None,
                     help="key value; return only keys sharing its word")
-    sx.add_argument("--retention-now", default=None,
-                    help="ISO datetime; fail loudly if the routed cover "
-                         "needs expired fine-tier segments")
-    sx.add_argument("--limit", type=int, default=100)
-    sx.set_defaults(fn=_cmd_serve_sax)
 
-    st_ = sub.add_parser("serve-trend",
-                         help="series health over a routed range: exact "
-                              "slope/r2, changepoint, max drawdown per key")
-    st_.add_argument("--warehouse", required=True)
-    st_.add_argument("--t0", type=int, required=True)
-    st_.add_argument("--t1", type=int, required=True)
-    st_.add_argument("--grain", default="1h")
-    st_.add_argument("--measure", default="point_count")
-    st_.add_argument("--keys", default="lang")
-    st_.add_argument("--retention-now", default=None,
-                     help="ISO datetime; fail loudly if the routed cover "
-                          "needs expired fine-tier segments")
-    st_.add_argument("--limit", type=int, default=100)
+    st_ = _serve_parser(sub, "serve-trend", _cmd_serve_trend,
+                        "series health over a routed range: exact "
+                        "slope/r2, changepoint, max drawdown per key")
     st_.add_argument("--movers", action="store_true",
                      help="rank by |slope| desc (top movers) instead of key")
     st_.add_argument("--robust", action="store_true",
                      help="add Theil-Sen median slope + Mann-Kendall S "
                           "(outlier-resistant trend) per key")
-    st_.set_defaults(fn=_cmd_serve_trend)
 
-    sal = sub.add_parser("serve-alerts",
-                         help="hysteresis alert episodes over a routed "
-                              "range: opens at >=hi, closes at <=lo, "
-                              "dead band extends")
-    sal.add_argument("--warehouse", required=True)
-    sal.add_argument("--t0", type=int, required=True)
-    sal.add_argument("--t1", type=int, required=True)
-    sal.add_argument("--grain", default="1h")
-    sal.add_argument("--measure", default="point_count")
-    sal.add_argument("--keys", default="lang")
+    sal = _serve_parser(sub, "serve-alerts", _cmd_serve_alerts,
+                        "hysteresis alert episodes over a routed range: "
+                        "opens at >=hi, closes at <=lo, dead band extends",
+                        limit=1000)
     sal.add_argument("--hi", type=int, required=True)
     sal.add_argument("--lo", type=int, required=True)
-    sal.add_argument("--retention-now", default=None,
-                     help="ISO datetime; fail loudly if the routed cover "
-                          "needs expired fine-tier segments")
-    sal.add_argument("--limit", type=int, default=1000)
-    sal.set_defaults(fn=_cmd_serve_alerts)
 
-    scov = sub.add_parser("serve-coverage",
-                          help="tier-completeness SLA per (key, day): "
-                               "present vs expected buckets + worst "
-                               "missing run, worst days first")
-    scov.add_argument("--warehouse", required=True)
-    scov.add_argument("--grain", default="1m")
-    scov.add_argument("--keys", default="lang")
+    scov = _serve_parser(sub, "serve-coverage", _cmd_serve_coverage,
+                         "tier-completeness SLA per (key, day): present vs "
+                         "expected buckets + worst missing run, worst days "
+                         "first", "warehouse grain keys limit", grain="1m")
     scov.add_argument("--t0", type=int, default=None)
     scov.add_argument("--t1", type=int, default=None)
-    scov.add_argument("--limit", type=int, default=100)
-    scov.set_defaults(fn=_cmd_serve_coverage)
 
-    sdr = sub.add_parser("serve-drift",
-                         help="PSI distribution drift between two routed "
-                              "ranges, from the stored histogram tiers")
-    sdr.add_argument("--warehouse", required=True)
-    sdr.add_argument("--a0", type=int, required=True)
-    sdr.add_argument("--a1", type=int, required=True)
-    sdr.add_argument("--b0", type=int, required=True)
-    sdr.add_argument("--b1", type=int, required=True)
-    sdr.add_argument("--keys", default="lang")
-    sdr.add_argument("--retention-now", default=None,
-                     help="ISO datetime; fail loudly if either routed cover "
-                          "needs expired fine-tier segments")
-    sdr.add_argument("--limit", type=int, default=100)
-    sdr.set_defaults(fn=_cmd_serve_drift)
+    _serve_parser(sub, "serve-drift", _cmd_serve_drift,
+                  "PSI distribution drift between two routed ranges, from "
+                  "the stored histogram tiers",
+                  "warehouse a0 a1 b0 b1 keys retention-now limit")
 
-    sct = sub.add_parser("serve-contribution",
-                         help="which keys drove the metric change between "
-                              "two routed ranges (delta + share of move)")
-    sct.add_argument("--warehouse", required=True)
-    sct.add_argument("--a0", type=int, required=True)
-    sct.add_argument("--a1", type=int, required=True)
-    sct.add_argument("--b0", type=int, required=True)
-    sct.add_argument("--b1", type=int, required=True)
-    sct.add_argument("--grain", default="1h")
-    sct.add_argument("--measure", default="point_count")
-    sct.add_argument("--keys", default="lang")
-    sct.add_argument("--retention-now", default=None,
-                     help="ISO datetime; fail loudly if either routed cover "
-                          "needs expired fine-tier segments")
-    sct.add_argument("--limit", type=int, default=100)
-    sct.set_defaults(fn=_cmd_serve_contribution)
+    _serve_parser(sub, "serve-contribution", _cmd_serve_contribution,
+                  "which keys drove the metric change between two routed "
+                  "ranges (delta + share of move)",
+                  "warehouse a0 a1 b0 b1 grain measure keys retention-now limit")
 
-    sd = sub.add_parser("serve-distinct",
-                        help="routed distinct-count estimates from the HLL "
-                             "sketch tiers (history+edge)")
-    sd.add_argument("--warehouse", required=True)
-    sd.add_argument("--t0", type=int, required=True)
-    sd.add_argument("--t1", type=int, required=True)
-    sd.add_argument("--keys", default="lang")
-    sd.add_argument("--retention-now", default=None,
-                    help="ISO datetime; fail loudly if the routed cover "
-                         "needs expired fine-tier segments")
-    sd.add_argument("--limit", type=int, default=100)
-    sd.set_defaults(fn=_cmd_serve_distinct)
+    _serve_parser(sub, "serve-distinct", _cmd_serve_distinct,
+                  "routed distinct-count estimates from the HLL sketch "
+                  "tiers (history+edge)",
+                  "warehouse t0 t1 keys retention-now limit")
 
     args = p.parse_args(argv)
     args.fn(args)

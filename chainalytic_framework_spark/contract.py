@@ -348,7 +348,8 @@ def rollup_1m_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_1h_cascade_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Downsample cascade: Spark builds 1m partials then re-aggregates to
     1h; oracle computes 1h directly from raw — proves cascade exactness
-    (operators/cascade.py) through the gate."""
+    (the stored-parent cascade of ``run_pipeline``, operators/registry.py
+    ``downsample_with_spec``) through the gate."""
     ev = _t_raw(spark, sf_dir, "events")
     m1 = (
         ev.select(_bucket_epoch("ts", 60), "event_type", _cents().alias("_c"))
@@ -3778,11 +3779,11 @@ def bigram_surprisal_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def serve_tier_merge_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """History+edge tier serving (streaming/stream.py::merge_batch_edge,
-    the primitive under ``serve_tier`` / ``serve_distribution`` /
-    ``serve_distinct``): the batch tier covers the first 15 days; the
-    streaming edge covers everything but carries replay DUPLICATES
-    (unioned with itself — deduped by the same ``.distinct()`` the
-    serve_tier read applies, streaming partial rows being deterministic
+    the primitive under ``serve_frames``): the batch tier covers the
+    first 15 days; the streaming edge covers everything but carries
+    replay DUPLICATES (unioned with itself — deduped by the same
+    ``.distinct()`` the tier family's log merge applies, streaming
+    partial rows being deterministic
     re-derivations) and a +1,000,000 count perturbation. The merged
     read must take batch values on every covered bucket (perturbation
     invisible there) and edge values beyond — exactly the oracle's
@@ -3896,14 +3897,14 @@ def routed_series_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def serve_distinct_merge_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-count serving merge (streaming/stream.py::serve_distinct
-    routing logic, certified on EXACT counts because a sketch estimate
+    """Distinct-count serving merge (streaming/stream.py::serve_frames
+    over the sketch family, certified on EXACT counts because a sketch estimate
     has no cross-engine oracle): the batch side carries the
     authoritative per-(day, type) distinct-user counts for its covered
     days; the edge side deliberately computes a DIFFERENT statistic
     (distinct of user_id mod 47 — standing in for the HLL estimate).
     The merged result shows edge numbers only past batch coverage —
-    the per-bucket batch-wins rule ``serve_distinct`` relies on, here
+    the per-bucket batch-wins rule ``serve_frames`` relies on, here
     observable because the two sides genuinely disagree."""
     from .streaming.stream import merge_batch_edge
 

@@ -7,7 +7,9 @@ turns billions of tiny tier rows into compact per-series blobs that
 partition-prune on (tier, url_bucket) and decompress independently —
 blob-level parallelism, the standard TSDB cold-path layout.
 
-Implementation: ``applyInPandas`` per url_bucket group; inside a group
+Implementation: the encode runs ``applyInPandas`` per url_bucket group
+(a url's series must meet in one group); the decode runs
+``mapInPandas`` per Arrow batch (a blob decodes alone, so no shuffle).
 BOTH directions run batch-wide through the codec's many-series forms
 (``encode_series_many`` / ``decode_series_many``) — no per-row, and no
 per-SERIES, Python in either hot path.
@@ -96,40 +98,35 @@ def encode_cold(tier_df: DataFrame, measures: list[str] | None = None,
 
 
 def decode_cold(cold_df: DataFrame) -> DataFrame:
-    """Unpack cold blobs back to (url, measure, bucket_start, value)
-    points — the cold READ path. Each pandas group decodes its whole
-    blob batch through the transposed batch decoder
+    """Unpack cold blobs back to (url, url_hash, measure, bucket_start,
+    value) points — the cold READ path. Blobs decode independently, so
+    each Arrow batch of blob rows decodes where it was scanned
+    (``mapInPandas``: no shuffle) through the transposed batch decoder
     (``codec.decode_series_many``: all blob cursors advance in
-    lock-step, vectorized across the batch) and expands the key columns
+    lock-step, vectorized across the batch), and the key columns expand
     with ``np.repeat`` — no per-blob or per-point Python."""
 
-    def dec(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0 or int(pdf["n_points"].sum()) == 0:
-            return pd.DataFrame(
+    def dec(batches):
+        for pdf in batches:
+            if len(pdf) == 0 or int(pdf["n_points"].sum()) == 0:
+                continue
+            offsets, ts_flat, vals_flat = decode_series_many(
+                [bytes(b) for b in pdf["blob"]]
+            )
+            counts = np.diff(offsets)
+            yield pd.DataFrame(
                 {
-                    "url": pd.Series(dtype="object"),
-                    "url_hash": pd.Series(dtype="int64"),
-                    "measure": pd.Series(dtype="object"),
-                    "bucket_start": pd.Series(dtype="datetime64[us]"),
-                    "value": pd.Series(dtype="int64"),
+                    "url": np.repeat(pdf["url"].to_numpy(), counts),
+                    "url_hash": np.repeat(pdf["url_hash"].to_numpy(), counts),
+                    "measure": np.repeat(pdf["measure"].to_numpy(), counts),
+                    "bucket_start": pd.to_datetime(ts_flat, unit="s"),
+                    "value": vals_flat.astype(np.int64),
                 }
             )
-        offsets, ts_flat, vals_flat = decode_series_many(
-            [bytes(b) for b in pdf["blob"]]
-        )
-        counts = np.diff(offsets)
-        return pd.DataFrame(
-            {
-                "url": np.repeat(pdf["url"].to_numpy(), counts),
-                "url_hash": np.repeat(pdf["url_hash"].to_numpy(), counts),
-                "measure": np.repeat(pdf["measure"].to_numpy(), counts),
-                "bucket_start": pd.to_datetime(ts_flat, unit="s"),
-                "value": vals_flat.astype(np.int64),
-            }
-        )
 
-    grouped = cold_df.withColumn("_b", url_bucket("url"))
-    return grouped.groupBy("_b").applyInPandas(dec, schema=POINTS_SCHEMA)
+    return cold_df.select("url", "url_hash", "measure", "n_points", "blob").mapInPandas(
+        dec, schema=POINTS_SCHEMA
+    )
 
 
 def enforce_cold_policy(store, tier: str = "1d", colder_than_epoch: int = 0,
@@ -192,9 +189,8 @@ def read_tier_with_cold(store, tier: str = "1d",
 
     Scale shape: the cold side is only expired buckets, the precedence
     anti-join is keyed on (url, bucket_start) — an ordinary shuffled
-    join pruned by whatever time predicate the caller pushes down; blob
-    decode parallelism is per url_bucket group as in
-    :func:`decode_cold`."""
+    join pruned by whatever time predicate the caller pushes down; blobs
+    decode per scanned Arrow batch as in :func:`decode_cold`."""
     measures = measures or ["point_count", "byte_size", "text_len_sum"]
     name, cold_name = f"tier_{tier}", f"cold_{tier}"
     have_hot, have_cold = store.exists(name), store.exists(cold_name)

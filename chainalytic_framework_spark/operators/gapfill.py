@@ -7,8 +7,8 @@ Two implementations with identical semantics:
    observations, then ``last(x, ignorenulls=True)`` over an ordered
    window. Stays inside whole-stage codegen; no Python in the hot path.
 2. ``gapfill_locf_pandas`` — ``applyInPandas`` reindex+ffill variant,
-   used inside the stateful fold (operators/fold.py) where per-key
-   pandas state is already in hand.
+   no engine path calls it: it is the independent reference the
+   equality test (tests/test_gapfill.py) holds ``gapfill_locf`` to.
 
 Semantics (FIXTURES.md §2):
 - A gap bucket gets the measures of the last OBSERVED bucket carried

@@ -139,7 +139,10 @@ def _routed(
     retention policy when one is given, then scan each routed tier ONCE
     with its segments OR-ed (``time_range_filter`` each, plus ``NOT
     gap_filled`` where the column exists), apply ``select`` and union
-    the per-tier branches."""
+    the per-tier branches. No frames at all is a ValueError, like an
+    empty range."""
+    if not frames:
+        raise ValueError("no stored tier to route over")
     segs = route_range(e0, e1, tiers or [t for t in TIER_ORDER if t in frames])
     if retention_horizons is not None:
         if now_epoch is None:

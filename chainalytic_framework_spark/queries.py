@@ -144,7 +144,7 @@ def series_points(
     includes ``lang``, which flaps between crawls): the series value is
     their SUM — deterministic, and correct for the additive measures
     this serves (point_count, byte_size, text_len_sum). Variants are
-    summed WITHIN each source first, then hot-wins applies per bucket.
+    summed within the winning source only.
 
     ``t0``/``t1`` accept naive-UTC/aware datetimes or epoch seconds;
     comparisons happen in epoch space (timezone-safe)."""
@@ -185,13 +185,12 @@ def series_points(
             cold = cold.where(time_range_filter(cold, e0, e1))
         parts = parts.unionByName(cold)
 
-    per_src = parts.groupBy("url", "url_hash", "bucket_start", "_src").agg(
-        F.sum("value").alias("value")
-    )
-    return (
-        per_src.groupBy("url", "url_hash", "bucket_start")
-        .agg(F.max_by("value", "_src").alias("value"))
-        .select("url", "url_hash", "bucket_start", "value")
+    # one aggregation: a bucket with any hot row takes its hot sum, else
+    # its cold sum
+    hot = F.max("_src") == 1
+    return parts.groupBy("url", "url_hash", "bucket_start").agg(
+        F.when(hot, F.sum(F.when(F.col("_src") == 1, F.col("value"))))
+        .otherwise(F.sum("value")).alias("value")
     )
 
 

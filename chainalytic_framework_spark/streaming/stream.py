@@ -6,21 +6,28 @@ Reference analogue: the aggregator poll loop + RPC tail fetch
 available" ≡ no new files). Here: ``readStream`` over the pages
 directory (or Iceberg/Kafka source on a cluster), event-time tumbling
 windows with a watermark for late data (T3), and ``foreachBatch``
-committing through the same TableStore + manifest path as the batch
-pipeline — one code path for micro-batch and backfill.
+committing through the same TableStore as the batch pipeline.
 
-The 1m tier is maintained streaming-side; coarser tiers remain batch
-cascade jobs over committed 1m partitions (the standard continuous-
-aggregate split: streaming keeps the edge fresh, batch re-derives
-the heavy history).
+Each stream appends finalized 1m windows to a day-partitioned partial
+log, ``<family>_1m_stream``, beside the batch family's ``<family>_1m``
+table; coarser tiers remain batch cascade jobs over committed 1m
+partitions (the standard continuous-aggregate split: streaming keeps
+the edge fresh, batch re-derives the heavy history). ``FAMILIES`` is
+the one place that says, per family (``tier``, ``hist``, ``sketch``),
+which column buckets the log, how its partials merge, and on which
+grain its rows replace batch rows. ``serve_frames`` reads a family's
+stored tiers with the finest one served history+edge, and
+``compact_edge`` folds the log's closed days into the batch table.
 """
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.bucketing import url_bucket
+from ..operators.bucketing import TIER_ORDER, url_bucket
 from ..operators.fold import prepare_observations
 from ..operators.registry import DEFAULT_SET
 from ..tables import TableStore
@@ -60,6 +67,80 @@ def streaming_rollup_1m(pages_stream: DataFrame, watermark: str = "10 minutes") 
     )
 
 
+class Family(NamedTuple):
+    """How one tier family's streaming partial log is read and folded
+    into its batch tables."""
+
+    bucket: str  # batch-wins compares batch and edge on this column
+    merge: Callable[[DataFrame], DataFrame]  # raw log -> one row per grain key, bucket_day kept
+    grain: tuple[str, ...] | None  # compaction grain; None: the log is pruned, not compacted
+
+
+def _merge_hist(log: DataFrame) -> DataFrame:
+    # counts, unlike HLL unions, are not idempotent: ``distinct`` makes a
+    # crash-replayed (byte-identical) finalized window count once
+    return (
+        log.distinct()
+        .groupBy("lang", "bucket_epoch", "hb_lo", "bucket_day")
+        .agg(F.sum("hb_count").alias("hb_count"))
+        .select("lang", "bucket_epoch", "hb_lo", "hb_count", "bucket_day")
+    )
+
+
+def _merge_sketch(log: DataFrame) -> DataFrame:
+    # hll_union_agg is idempotent over replayed partials: no distinct
+    return (
+        log.groupBy("bucket_start", "lang", "bucket_day")
+        .agg(F.hll_union_agg("url_sketch").alias("url_sketch"))
+        .select("bucket_start", "lang", "url_sketch", "bucket_day")
+    )
+
+
+# Stream rows are watermark-finalized windows, so a crash between
+# foreachBatch's append and the checkpoint commit re-appends
+# byte-identical rows: ``distinct`` makes the tier log replay-safe. The
+# tier grain is the FULL one — lang can flap between crawls of one url,
+# and anti-joining on (bucket_start, url_hash) alone would drop the
+# batch row of the other lang variant.
+FAMILIES: dict[str, Family] = {
+    "tier": Family("bucket_start", DataFrame.distinct,
+                   ("bucket_start", "url_hash", "url", "lang")),
+    "hist": Family("bucket_epoch", _merge_hist, ("bucket_epoch", "lang", "hb_lo")),
+    "sketch": Family("bucket_start", _merge_sketch, None),
+}
+
+EDGE_TIER = "1m"  # every stream writes finalized 1m windows
+
+
+def _day(d):
+    """A date from a date or a naive-UTC datetime."""
+    return d.date() if hasattr(d, "date") else d
+
+
+def _epoch_day(df: DataFrame) -> DataFrame:
+    return df.withColumn("bucket_day", F.to_date(F.col("bucket_epoch").cast("timestamp")))
+
+
+def _start(query: DataFrame, checkpoint: str, commit: Callable[[DataFrame], None],
+           available_now: bool):
+    """Start ``query`` in append mode, calling ``commit`` on every
+    non-empty micro-batch; ``available_now`` drains the backlog and
+    stops (the batch-parity mode tests use)."""
+
+    def each(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            commit(batch_df)
+
+    writer = (
+        query.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(each)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def start_stream_to_store(
     spark: SparkSession,
     pages_path: str,
@@ -70,19 +151,15 @@ def start_stream_to_store(
 ):
     """foreachBatch sink: each micro-batch's tier rows are appended
     through the TableStore (Iceberg MERGE on a cluster; partitioned
-    parquet append here). availableNow=True drains the backlog and
-    stops — the batch-parity mode used by tests.
+    parquet append here) to the ``tier_1m_stream`` log.
 
     ``with_sketches``: additionally append one HLL distinct-url partial
-    per finalized (bucket, lang) — an APPEND-ONLY partial log (never a
-    streaming read-modify-write): sketches are mergeable, so the read
-    path unions the log (``stream_sketch_estimate``), and the batch
-    cascade compacts it, exactly like the numeric-measure split."""
-    stream = streaming_rollup_1m(read_pages_stream(spark, pages_path))
+    per finalized (bucket, lang) to ``sketch_1m_stream`` — an
+    APPEND-ONLY partial log (never a streaming read-modify-write):
+    sketches are mergeable, so the read path unions the log
+    (``stream_sketch_estimate``, ``serve_frames``)."""
 
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def commit(batch_df: DataFrame) -> None:
         out = (batch_df.withColumn("bucket_day", F.to_date("bucket_start"))
                .withColumn("url_bucket", url_bucket("url")))
         out.persist()
@@ -98,14 +175,8 @@ def start_stream_to_store(
             )
         out.unpersist()
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(commit_batch)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(streaming_rollup_1m(read_pages_stream(spark, pages_path)),
+                  checkpoint_dir, commit, trigger_available_now)
 
 
 def stream_sketch_estimate(store: TableStore) -> DataFrame:
@@ -113,9 +184,8 @@ def stream_sketch_estimate(store: TableStore) -> DataFrame:
     estimates per (bucket, lang) via hll_union_agg — correct however
     many micro-batches contributed partials for a bucket."""
     return (
-        store.read("sketch_1m_stream")
-        .groupBy("bucket_start", "lang")
-        .agg(F.hll_union_agg("url_sketch").alias("url_sketch"))
+        FAMILIES["sketch"].merge(store.read("sketch_1m_stream"))
+        .drop("bucket_day")
         .withColumn("distinct_urls_est", F.hll_sketch_estimate("url_sketch"))
     )
 
@@ -129,16 +199,15 @@ def start_histogram_stream_to_store(
     trigger_available_now: bool = True,
 ):
     """Streaming text-length HISTOGRAM partials — the distribution twin
-    of the sketch partial log, closing the gap where the freshest edge
-    could serve counts/sums and distinct estimates but not quantiles.
+    of the sketch partial log, so the freshest edge serves quantiles
+    too.
 
     A watermarked 1m tumbling aggregation over (window, lang,
     leading-decimal-digit bucket of length(text)) — the exact bucket
     layout of the batch ``hist_1m`` tier (operators/histogram.py), so
     partials are losslessly mergeable with the stored cascade. Append
     output mode emits each finalized (window, lang, hb_lo) count once;
-    foreachBatch appends it to the ``hist_1m_stream`` partial log via
-    the TableStore (same Iceberg/parquet unification as the tier rows).
+    foreachBatch appends it to the ``hist_1m_stream`` partial log.
     Counts are mergeable, so the read path sums the log
     (:func:`stream_histogram_counts`) and quantiles come from the
     merged counts via ``quantile_from_histogram`` — no streaming
@@ -163,43 +232,23 @@ def start_histogram_stream_to_store(
             "lang", "hb_lo", "hb_count",
         )
     )
-
-    def commit_hist(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        out = batch_df.withColumn(
-            "bucket_day", F.to_date(F.col("bucket_epoch").cast("timestamp"))
-        )
-        store.append(out, "hist_1m_stream", partition_by=["bucket_day"])
-
-    writer = (
-        hist.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(commit_hist)
+    return _start(
+        hist, checkpoint_dir,
+        lambda df: store.append(_epoch_day(df), "hist_1m_stream", partition_by=["bucket_day"]),
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_histogram_counts(store: TableStore) -> DataFrame:
     """Merge-at-read over the streaming histogram partial log: exact
     per (bucket_epoch, lang, hb_lo) counts — correct however many
-    micro-batches contributed partials for a bucket. The ``distinct``
-    guard makes the read REPLAY-SAFE: a crash between foreachBatch's
-    append and the checkpoint commit re-appends a finalized window's
-    rows, and finalized windows are deterministic, so replayed rows are
-    byte-identical duplicates (the same argument
-    ``compact_stream_into_batch`` uses for tier rows) — counts, unlike
-    HLL unions, are NOT idempotent, so without this a crash would
-    double the affected buckets. Feed the result straight to
-    ``quantile_from_histogram`` for edge quantiles, or through
-    ``serve_distribution`` for a seamless history+edge read."""
+    micro-batches contributed partials for a bucket, and replay-safe
+    (``FAMILIES["hist"]`` dedupes before summing). Feed the result
+    straight to ``quantile_from_histogram`` for edge quantiles, or use
+    ``serve_frames(store, "hist")`` for a seamless history+edge read."""
     return (
-        store.read("hist_1m_stream")
-        .distinct()
-        .groupBy("bucket_epoch", "lang", "hb_lo")
-        .agg(F.sum("hb_count").alias("hb_count"))
+        FAMILIES["hist"].merge(store.read("hist_1m_stream"))
+        .select("bucket_epoch", "lang", "hb_lo", "hb_count")
     )
 
 
@@ -233,23 +282,12 @@ def start_heavyhitter_stream_to_store(
             "cnt",
         )
     )
-
-    def commit_hh(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        out = topk_partial_from_counts(batch_df, k).withColumn(
-            "bucket_day", F.to_date(F.col("bucket_epoch").cast("timestamp"))
-        )
-        store.append(out, "hh_1m_stream", partition_by=["bucket_day"])
-
-    writer = (
-        counts.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(commit_hh)
+    return _start(
+        counts, checkpoint_dir,
+        lambda df: store.append(_epoch_day(topk_partial_from_counts(df, k)),
+                                "hh_1m_stream", partition_by=["bucket_day"]),
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_heavy_hitters(store: TableStore, parent_secs: int = 3600,
@@ -270,7 +308,7 @@ def prune_sketch_stream(store: TableStore, closed_before) -> list:
     deletes. Returns pruned days."""
     if not store.exists("sketch_1m_stream"):
         return []
-    cb = closed_before.date() if hasattr(closed_before, "date") else closed_before
+    cb = _day(closed_before)
     days = [
         r["bucket_day"]
         for r in store.read("sketch_1m_stream")
@@ -284,192 +322,83 @@ def prune_sketch_stream(store: TableStore, closed_before) -> list:
     return days
 
 
-def compact_hist_stream_into_batch(store: TableStore, closed_before=None) -> list:
-    """Fold CLOSED days of the streaming histogram partial log into the
-    batch ``hist_1m`` tier — the distribution twin of
-    ``compact_stream_into_batch``: merge the day's partials (dedupe
-    replay duplicates, sum per bucket), union with any existing batch
-    rows for those days OUTSIDE the stream's buckets (batch re-derives
-    win inside them), dynamic-partition-overwrite the days, then drop
-    them from the log. Idempotent; returns the compacted day list."""
-    if not store.exists("hist_1m_stream"):
-        return []
-    log = store.read("hist_1m_stream").distinct()
-    if closed_before is not None:
-        cb = closed_before.date() if hasattr(closed_before, "date") else closed_before
-        log = log.where(F.col("bucket_day") < F.lit(cb))
-    days = [r["bucket_day"] for r in log.select("bucket_day").distinct().collect()]
-    if not days:
-        return []
-    merged = (
-        log.groupBy("bucket_day", "bucket_epoch", "lang", "hb_lo")
-        .agg(F.sum("hb_count").alias("hb_count"))
-        .select("lang", "bucket_epoch", "hb_lo", "hb_count", "bucket_day")
-    )
-    if store.exists("hist_1m"):
-        existing = store.read("hist_1m").where(F.col("bucket_day").isin(days))
-        keep = existing.join(
-            merged.select("bucket_epoch", "lang", "hb_lo").distinct(),
-            ["bucket_epoch", "lang", "hb_lo"], "left_anti",
-        )
-        merged = merged.unionByName(keep.select(merged.columns))
-    store.overwrite_partitions(merged, "hist_1m", ["bucket_day"])
-    store.delete_where_partition("hist_1m_stream", "bucket_day", [str(d) for d in days])
-    return days
-
-
 def merge_batch_edge(batch: DataFrame, edge: DataFrame, bucket_col: str) -> DataFrame:
     """Per-bucket batch-wins union — THE history+edge serving primitive
-    shared by ``serve_tier`` / ``serve_distribution`` / ``serve_distinct``
-    (and driver-certified directly by the ``serve_*_merge_events``
-    contract queries): the batch side is authoritative for every bucket
-    value it covers (a batch run re-derives a covered bucket in FULL),
-    the edge serves every other bucket. The covered set is one row per
-    closed bucket inside the fine tier's retention horizon (~0.5M
-    rows/year) — broadcastable, so the fact-sized edge never shuffles."""
+    under ``serve_frames`` (and driver-certified directly by the
+    ``serve_*_merge_events`` contract queries): the batch side is
+    authoritative for every bucket value it covers (a batch run
+    re-derives a covered bucket in FULL), the edge serves every other
+    bucket — ingest gaps below the batch high-water included, and an
+    existing-but-empty batch table serves the whole edge. The covered
+    set is one row per closed bucket inside the fine tier's retention
+    horizon (~0.5M rows/year) — broadcastable, so the fact-sized edge
+    never shuffles."""
     covered = batch.select(bucket_col).distinct()
     return batch.unionByName(
         edge.join(F.broadcast(covered), bucket_col, "left_anti").select(batch.columns)
     )
 
 
-def serve_distribution(store: TableStore, series_cols=("lang",)) -> DataFrame:
-    """Seamless history+edge distribution read: the stored batch
-    ``hist_1m`` tier is authoritative for every bucket it COVERS (batch
-    re-derives a covered bucket in full), and the streaming partial log
-    serves every other bucket — batch-wins rides in as a broadcast
-    anti-join on the batch's distinct bucket set, so overlap (a stream
-    day later re-derived by the batch pipeline) can never double-count.
-    ADVICE r3 fix: the previous single global-max cutoff silently
-    dropped stream partials below the high-water that batch never
-    covered (ingest gap), and an existing-but-empty ``hist_1m`` (null
-    high-water) dropped the whole streaming edge; per-bucket coverage
-    handles both. The covered set is one row per closed 1m bucket
-    inside the fine tier's retention horizon (~0.5M rows/year —
-    broadcastable; history beyond the horizon serves from coarser
-    tiers via the router). Output: (series..., bucket_epoch, hb_lo,
-    hb_count) — feed straight to ``quantile_from_histogram``.
-    """
-    cols = [*series_cols, "bucket_epoch", "hb_lo", "hb_count"]
-    have_batch = store.exists("hist_1m")
-    have_stream = store.exists("hist_1m_stream")
-    if not have_batch and not have_stream:
-        raise ValueError("no hist_1m or hist_1m_stream in store")
-    if have_batch and not have_stream:
-        return store.read("hist_1m").select(*cols)
-    stream_part = stream_histogram_counts(store).select(*cols)
-    if not have_batch:
-        return stream_part
-    batch = store.read("hist_1m").select(*cols)
-    return merge_batch_edge(batch, stream_part, "bucket_epoch")
+def serve_frames(store: TableStore, family: str) -> dict[str, DataFrame]:
+    """``{tier: DataFrame}`` of every stored ``<family>_<tier>`` table
+    (``family`` is a ``FAMILIES`` key), the router's input. When the
+    family's stream log exists, the finest tier is served history+edge:
+    the batch ``<family>_1m`` and the merged log, per-bucket batch-wins
+    (``merge_batch_edge``) over the columns both carry — or the merged
+    log alone when no batch table is stored. Empty when the warehouse
+    holds none of the family's tables."""
+    fam = FAMILIES[family]
+    frames = {t: store.read(f"{family}_{t}") for t in TIER_ORDER
+              if store.exists(f"{family}_{t}")}
+    log = f"{family}_{EDGE_TIER}_stream"
+    if store.exists(log):
+        edge = fam.merge(store.read(log))
+        batch = frames.get(EDGE_TIER)
+        if batch is not None:
+            shared = [c for c in batch.columns if c in edge.columns]
+            edge = merge_batch_edge(batch.select(shared), edge, fam.bucket)
+        frames[EDGE_TIER] = edge
+    return frames
 
 
-def serve_distinct(store: TableStore) -> DataFrame:
-    """Seamless history+edge DISTINCT-count read — the sketch twin of
-    ``serve_distribution``/``serve_tier``: the batch ``sketch_1m`` tier
-    is authoritative for buckets it covers; the streaming sketch
-    partial log serves the rest (per-bucket batch-wins anti-join).
-    Output: (bucket_start, lang, url_sketch, distinct_urls_est) —
-    partials stay MERGEABLE, so callers can keep unioning upward
-    (``read_routed_distinct``) before estimating.
-
-    The stream side unions its per-micro-batch partials per bucket
-    first (hll_union_agg is idempotent over replayed byte-identical
-    partials — stronger than the count logs, no distinct needed)."""
-    have_b, have_s = store.exists("sketch_1m"), store.exists("sketch_1m_stream")
-    if not have_b and not have_s:
-        raise ValueError("no sketch_1m or sketch_1m_stream in store")
-    cols = ["bucket_start", "lang", "url_sketch"]
-    batch = store.read("sketch_1m").select(*cols) if have_b else None
-    if not have_s:
-        merged = batch
-    else:
-        edge = (
-            store.read("sketch_1m_stream")
-            .groupBy("bucket_start", "lang")
-            .agg(F.hll_union_agg("url_sketch").alias("url_sketch"))
-            .select(*cols)
-        )
-        if batch is None:
-            merged = edge
-        else:
-            merged = merge_batch_edge(batch, edge, "bucket_start")
-    return merged.withColumn(
-        "distinct_urls_est", F.hll_sketch_estimate("url_sketch")
-    )
-
-
-def serve_tier(store: TableStore, tier: str = "1m") -> DataFrame:
-    """Seamless history+edge NUMERIC tier read — the tier-table twin of
-    ``serve_distribution``: the batch ``tier_<t>`` table is
-    authoritative for every bucket it covers (a batch run re-derives a
-    covered bucket in full), and the streaming log serves every other
-    bucket via a broadcast anti-join on the batch's distinct bucket set
-    (per-bucket batch-wins: ingest gaps below the batch high-water
-    serve from the stream, an empty batch table serves the whole edge —
-    the serve_distribution ADVICE-r3 semantics from day one).
-
-    Stream rows are watermark-finalized windows, so replay duplicates
-    after a crash are byte-identical — ``distinct`` makes the read
-    replay-safe (same argument as ``compact_stream_into_batch``).
-    Output schema = the batch tier's columns; feed it to ``read_routed``
-    as the finest tier for a history+edge routed range."""
-    name, sname = f"tier_{tier}", f"tier_{tier}_stream"
-    have_b, have_s = store.exists(name), store.exists(sname)
-    if not have_b and not have_s:
-        raise ValueError(f"no {name} or {sname} in store")
-    if have_b and not have_s:
-        return store.read(name)
-    stream = store.read(sname).distinct()
-    if not have_b:
-        return stream
-    return merge_batch_edge(store.read(name), stream, "bucket_start")
-
-
-def compact_stream_into_batch(store: TableStore, closed_before=None) -> list:
-    """Fold the streaming edge into the batch history: move the stream
-    table's CLOSED days into ``tier_1m`` (idempotent dynamic partition
-    overwrite, deduped — a crash between foreachBatch's write and the
-    checkpoint commit can double-append a finalized window, and
-    finalized windows are deterministic so ``distinct`` is exact), then
-    drop those days from the stream table. Coarser tiers re-derive from
-    the compacted 1m partitions on the next batch run — the standard
+def compact_edge(store: TableStore, family: str, closed_before=None) -> list:
+    """Fold the CLOSED days of ``<family>_1m_stream`` into the batch
+    ``<family>_1m`` table, then drop them from the log — the standard
     continuous-aggregate handoff (streaming keeps the edge fresh, batch
-    owns the heavy history). Returns the compacted day list.
+    owns the history; coarser tiers re-derive from the compacted days
+    on the next batch run). The day's merged log rows replace the batch
+    rows sharing their compaction grain; the other batch rows of the
+    day stay. Dynamic partition overwrite, so a re-run is a no-op.
+    Returns the compacted days.
 
-    ``closed_before`` (date / naive-UTC datetime): only stream days
+    ``closed_before`` (date / naive-UTC datetime): only log days
     strictly BEFORE it move — pass the stream's watermark day while the
     stream is live, so the still-open day is never compacted out from
     under it. ``None`` moves every day (safe only with the stream
     stopped)."""
-    if not store.exists("tier_1m_stream"):
+    fam = FAMILIES[family]
+    if fam.grain is None:
+        raise ValueError(f"the {family} edge is pruned, not compacted")
+    name = f"{family}_{EDGE_TIER}"
+    log = f"{name}_stream"
+    if not store.exists(log):
         return []
-    stream_rows = store.read("tier_1m_stream").distinct()
+    rows = fam.merge(store.read(log))
     if closed_before is not None:
-        cb = closed_before.date() if hasattr(closed_before, "date") else closed_before
-        stream_rows = stream_rows.where(F.col("bucket_day") < F.lit(cb))
-    days = [r["bucket_day"] for r in stream_rows.select("bucket_day").distinct().collect()]
+        rows = rows.where(F.col("bucket_day") < F.lit(_day(closed_before)))
+    days = [r["bucket_day"] for r in rows.select("bucket_day").distinct().collect()]
     if not days:
         return []
-    merged = stream_rows
-    if store.exists("tier_1m"):
-        existing = store.read("tier_1m").where(F.col("bucket_day").isin(days))
-        # stream rows win inside their days (freshest edge), but a
-        # conflict is the FULL tier grain — (bucket_start, url_hash,
-        # url, lang) — not just (bucket_start, url_hash): lang can flap
-        # between crawls of one url, and anti-joining on the short key
-        # would silently drop the batch row of the other lang variant
-        grain = [c for c in ("bucket_start", "url_hash", "url", "lang")
-                 if c in stream_rows.columns]
-        keep = existing.join(
-            stream_rows.select(*grain).distinct(), grain, "left_anti",
+    if store.exists(name):
+        keep = store.read(name).where(F.col("bucket_day").isin(days)).join(
+            rows.select(*fam.grain).distinct(), list(fam.grain), "left_anti",
         )
-        merged = stream_rows.unionByName(keep.select(stream_rows.columns))
+        rows = rows.unionByName(keep.select(rows.columns))
     store.overwrite_partitions(
-        store.cluster_for_write_hash(merged, ["bucket_day"], secondary="url_hash"),
-        "tier_1m", ["bucket_day"],
+        store.cluster_for_write_hash(rows, ["bucket_day"], secondary="url_hash"),
+        name, ["bucket_day"],
     )
-    store.delete_where_partition("tier_1m_stream", "bucket_day", [str(d) for d in days])
+    store.delete_where_partition(log, "bucket_day", [str(d) for d in days])
     return days
 
 

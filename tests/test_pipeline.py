@@ -380,31 +380,56 @@ def test_histogram_tiers_incremental_equals_direct(spark, tmp_path):
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
 
-def test_cli_serve_trend(spark, tmp_path):
-    """serve-trend: routed series -> exact linfit + changepoint +
-    drawdown per key, one JSON line."""
+def _cli(argv):
+    """Run one CLI command; its last stdout line, parsed as JSON."""
     import io
     import json
     from contextlib import redirect_stdout
 
-    from pyspark.sql import functions as F
+    from chainalytic_framework_spark.__main__ import main
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        main(argv)
+    return json.loads(buf.getvalue().strip().splitlines()[-1])
+
+
+def _json_rows(rows):
+    """Rows as the CLI prints them: ``asDict`` through ``json`` with
+    ``default=str``."""
+    import json
+
+    return json.loads(json.dumps([r.asDict() for r in rows], default=str))
+
+
+@pytest.fixture(scope="module")
+def cli_wh(spark, tmp_path_factory):
+    """One read-only warehouse for the CLI serve tests: ``synth --rows
+    2000`` then ``run --with-histograms --with-sketches`` (the tier
+    tables do not depend on those flags). ``a``/``b`` bound the 1m
+    tier's whole hours."""
+    from types import SimpleNamespace
 
     from chainalytic_framework_spark.__main__ import main
 
-    pages_out = str(tmp_path / "pages")
-    wh = str(tmp_path / "wh")
+    base = tmp_path_factory.mktemp("cli_wh")
+    pages_out = str(base / "pages")
+    wh = str(base / "wh")
     main(["synth", "--rows", "2000", "--out", pages_out])
-    main(["run", "--input", pages_out, "--warehouse", wh, "--snapshot-id", "s1"])
-    store = TableStore(spark, wh)
-    t1m = store.read("tier_1m")
+    main(["run", "--input", pages_out, "--warehouse", wh, "--snapshot-id", "s1",
+          "--with-histograms", "--with-sketches"])
+    t1m = TableStore(spark, wh).read("tier_1m")
     lo = t1m.agg(F.min(F.col("bucket_start").cast("long"))).first()[0]
     hi = t1m.agg(F.max(F.col("bucket_start").cast("long"))).first()[0] + 60
-    a, b = -(-lo // 3600) * 3600, (hi // 3600) * 3600
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        main(["serve-trend", "--warehouse", wh, "--t0", str(a), "--t1", str(b),
-              "--grain", "1h", "--keys", "lang"])
-    out = json.loads(buf.getvalue().strip().splitlines()[-1])
+    return SimpleNamespace(wh=wh, a=-(-lo // 3600) * 3600, b=(hi // 3600) * 3600)
+
+
+def test_cli_serve_trend(spark, cli_wh):
+    """serve-trend: routed series -> exact linfit + changepoint +
+    drawdown per key, one JSON line."""
+    wh, a, b = cli_wh.wh, cli_wh.a, cli_wh.b
+    out = _cli(["serve-trend", "--warehouse", wh, "--t0", str(a), "--t1", str(b),
+                "--grain", "1h", "--keys", "lang"])
     assert out["rows"], "expected at least one lang row"
     for r in out["rows"]:
         assert {"n_points", "slope_x1e4", "r2_signed_x1e4", "change_epoch",
@@ -417,139 +442,64 @@ def test_cli_serve_trend(spark, tmp_path):
             assert r["change_epoch"] is None
 
 
-def test_cli_serve_drift(spark, tmp_path):
+def test_cli_serve_drift(spark, cli_wh):
     """serve-drift: PSI between two routed ranges from the stored hist
     tiers; self-comparison is exactly zero drift."""
-    import io
-    import json
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from chainalytic_framework_spark.__main__ import main
-
-    pages_out = str(tmp_path / "pages")
-    wh = str(tmp_path / "wh")
-    main(["synth", "--rows", "2000", "--out", pages_out])
-    main(["run", "--input", pages_out, "--warehouse", wh,
-          "--snapshot-id", "s1", "--with-histograms"])
-    store = TableStore(spark, wh)
-    h = store.read("hist_1d")
+    wh = cli_wh.wh
+    h = TableStore(spark, wh).read("hist_1d")
     lo = h.agg(F.min("bucket_epoch")).first()[0]
     hi = h.agg(F.max("bucket_epoch")).first()[0] + 86400
     mid = lo + ((hi - lo) // (2 * 86400)) * 86400
 
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        main(["serve-drift", "--warehouse", wh,
-              "--a0", str(lo), "--a1", str(mid),
-              "--b0", str(mid), "--b1", str(hi), "--keys", "lang"])
-    out = json.loads(buf.getvalue().strip().splitlines()[-1])
+    out = _cli(["serve-drift", "--warehouse", wh,
+                "--a0", str(lo), "--a1", str(mid),
+                "--b0", str(mid), "--b1", str(hi), "--keys", "lang"])
     assert out["rows"], "expected per-lang drift rows"
     for r in out["rows"]:
         assert r["psi_x1e8"] >= 0 and r["n_bins_both"] >= 0
 
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        main(["serve-drift", "--warehouse", wh,
-              "--a0", str(lo), "--a1", str(hi),
-              "--b0", str(lo), "--b1", str(hi), "--keys", "lang"])
-    self_cmp = json.loads(buf.getvalue().strip().splitlines()[-1])
+    self_cmp = _cli(["serve-drift", "--warehouse", wh,
+                     "--a0", str(lo), "--a1", str(hi),
+                     "--b0", str(lo), "--b1", str(hi), "--keys", "lang"])
     assert self_cmp["rows"]
     for r in self_cmp["rows"]:
         assert r["psi_x1e8"] == 0
         assert r["n_bins_a_only"] == 0 and r["n_bins_b_only"] == 0
 
 
-def test_cli_serve_trend_movers(spark, tmp_path):
+def test_cli_serve_trend_movers(spark, cli_wh):
     """serve-trend --movers: rows ranked by |slope| desc, limit applied."""
-    import io
-    import json
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from chainalytic_framework_spark.__main__ import main
-
-    pages_out = str(tmp_path / "pages")
-    wh = str(tmp_path / "wh")
-    main(["synth", "--rows", "2000", "--out", pages_out])
-    main(["run", "--input", pages_out, "--warehouse", wh, "--snapshot-id", "s1"])
-    store = TableStore(spark, wh)
-    t1m = store.read("tier_1m")
-    lo = t1m.agg(F.min(F.col("bucket_start").cast("long"))).first()[0]
-    hi = t1m.agg(F.max(F.col("bucket_start").cast("long"))).first()[0] + 60
-    a, b = -(-lo // 3600) * 3600, (hi // 3600) * 3600
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        main(["serve-trend", "--warehouse", wh, "--t0", str(a), "--t1", str(b),
-              "--grain", "1h", "--keys", "url", "--movers", "--limit", "5"])
-    out = json.loads(buf.getvalue().strip().splitlines()[-1])
+    out = _cli(["serve-trend", "--warehouse", cli_wh.wh, "--t0", str(cli_wh.a),
+                "--t1", str(cli_wh.b), "--grain", "1h", "--keys", "url",
+                "--movers", "--limit", "5"])
     rows = out["rows"]
     assert 0 < len(rows) <= 5
     slopes = [abs(r["slope_x1e4"]) for r in rows]
     assert slopes == sorted(slopes, reverse=True)
 
 
-def test_cli_serve_sax(spark, tmp_path):
+def test_cli_serve_sax(spark, cli_wh):
     """serve-sax: shape words over the routed read; --like returns the
     reference key itself plus only same-word keys."""
-    import io
-    import json
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from chainalytic_framework_spark.__main__ import main
-
-    pages_out = str(tmp_path / "pages")
-    wh = str(tmp_path / "wh")
-    main(["synth", "--rows", "2000", "--out", pages_out])
-    main(["run", "--input", pages_out, "--warehouse", wh, "--snapshot-id", "s1"])
-    store = TableStore(spark, wh)
-    t1m = store.read("tier_1m")
-    lo = t1m.agg(F.min(F.col("bucket_start").cast("long"))).first()[0]
-    hi = t1m.agg(F.max(F.col("bucket_start").cast("long"))).first()[0] + 60
-    a, b = -(-lo // 3600) * 3600, (hi // 3600) * 3600
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        main(["serve-sax", "--warehouse", wh, "--t0", str(a), "--t1", str(b),
-              "--grain", "1h", "--keys", "lang", "--segments", "4",
-              "--alphabet", "2"])
-    out = json.loads(buf.getvalue().strip().splitlines()[-1])
-    rows = out["rows"]
+    base = ["serve-sax", "--warehouse", cli_wh.wh, "--t0", str(cli_wh.a),
+            "--t1", str(cli_wh.b), "--grain", "1h", "--keys", "lang",
+            "--segments", "4", "--alphabet", "2"]
+    rows = _cli(base)["rows"]
     assert rows and all(set(r["word"]) <= {"a", "b"} for r in rows)
     ref = rows[0]["lang"]
     ref_word = rows[0]["word"]
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        main(["serve-sax", "--warehouse", wh, "--t0", str(a), "--t1", str(b),
-              "--grain", "1h", "--keys", "lang", "--segments", "4",
-              "--alphabet", "2", "--like", ref])
-    like = json.loads(buf.getvalue().strip().splitlines()[-1])["rows"]
+    like = _cli(base + ["--like", ref])["rows"]
     assert any(r["lang"] == ref for r in like)
     assert all(r["word"] == ref_word for r in like)
 
 
-def test_cli_crawl_plan(spark, tmp_path):
+def test_cli_crawl_plan(spark, cli_wh):
     """crawl-plan: fold history -> recrawl due times -> per-host
     politeness grid; gap invariant holds within every host."""
-    import io
-    import json
     from collections import defaultdict
-    from contextlib import redirect_stdout
 
-    from chainalytic_framework_spark.__main__ import main
-
-    pages_out = str(tmp_path / "pages")
-    wh = str(tmp_path / "wh")
-    main(["synth", "--rows", "2000", "--out", pages_out])
-    main(["run", "--input", pages_out, "--warehouse", wh, "--snapshot-id", "s1"])
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        main(["crawl-plan", "--warehouse", wh, "--gap", "300",
-              "--limit", "500"])
-    out = json.loads(buf.getvalue().strip().splitlines()[-1])
+    out = _cli(["crawl-plan", "--warehouse", cli_wh.wh, "--gap", "300",
+                "--limit", "500"])
     assert out["n_urls"] > 0
     rows = out["rows"]
     assert rows
@@ -562,31 +512,12 @@ def test_cli_crawl_plan(spark, tmp_path):
         assert all(b - a >= 300 for a, b in zip(fetches, fetches[1:]))
 
 
-def test_cli_serve_trend_robust(spark, tmp_path):
+def test_cli_serve_trend_robust(spark, cli_wh):
     """serve-trend --robust: adds Theil-Sen median slope + Mann-Kendall S
     columns; the robust slope agrees in SIGN with |S| direction."""
-    import io
-    import json
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from chainalytic_framework_spark.__main__ import main
-
-    pages_out = str(tmp_path / "pages")
-    wh = str(tmp_path / "wh")
-    main(["synth", "--rows", "2000", "--out", pages_out])
-    main(["run", "--input", pages_out, "--warehouse", wh, "--snapshot-id", "s1"])
-    store = TableStore(spark, wh)
-    t1m = store.read("tier_1m")
-    lo = t1m.agg(F.min(F.col("bucket_start").cast("long"))).first()[0]
-    hi = t1m.agg(F.max(F.col("bucket_start").cast("long"))).first()[0] + 60
-    a, b = -(-lo // 3600) * 3600, (hi // 3600) * 3600
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        main(["serve-trend", "--warehouse", wh, "--t0", str(a), "--t1", str(b),
-              "--grain", "1h", "--keys", "lang", "--robust"])
-    out = json.loads(buf.getvalue().strip().splitlines()[-1])
+    out = _cli(["serve-trend", "--warehouse", cli_wh.wh, "--t0", str(cli_wh.a),
+                "--t1", str(cli_wh.b), "--grain", "1h", "--keys", "lang",
+                "--robust"])
     assert out["rows"]
     for r in out["rows"]:
         assert {"robust_slope_x1e4", "mk_s", "n_pairs"} <= set(r)
@@ -600,34 +531,15 @@ def test_cli_serve_trend_robust(spark, tmp_path):
                 assert r["mk_s"] <= r["n_pairs"] // 2
 
 
-def test_cli_serve_alerts(spark, tmp_path):
+def test_cli_serve_alerts(spark, cli_wh):
     """serve-alerts: hysteresis episodes over the routed read. With
     hi=1/lo=0 every key fires at its first bucket and (point_count
     never reaching 0) stays open to the end — exactly one episode per
     key spanning its series; with an unreachable hi, zero episodes."""
-    import io
-    import json
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from chainalytic_framework_spark.__main__ import main
-
-    pages_out = str(tmp_path / "pages")
-    wh = str(tmp_path / "wh")
-    main(["synth", "--rows", "2000", "--out", pages_out])
-    main(["run", "--input", pages_out, "--warehouse", wh, "--snapshot-id", "s1"])
-    store = TableStore(spark, wh)
-    t1m = store.read("tier_1m")
-    lo = t1m.agg(F.min(F.col("bucket_start").cast("long"))).first()[0]
-    hi = t1m.agg(F.max(F.col("bucket_start").cast("long"))).first()[0] + 60
-    a, b = -(-lo // 3600) * 3600, (hi // 3600) * 3600
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        main(["serve-alerts", "--warehouse", wh, "--t0", str(a),
-              "--t1", str(b), "--grain", "1h", "--keys", "lang",
-              "--hi", "1", "--lo", "0"])
-    out = json.loads(buf.getvalue().strip().splitlines()[-1])
+    wh, a, b = cli_wh.wh, cli_wh.a, cli_wh.b
+    out = _cli(["serve-alerts", "--warehouse", wh, "--t0", str(a),
+                "--t1", str(b), "--grain", "1h", "--keys", "lang",
+                "--hi", "1", "--lo", "0"])
     assert out["rows"], "hi=1 must fire for every lang with any bucket"
     langs = {r["lang"] for r in out["rows"]}
     for r in out["rows"]:
@@ -636,45 +548,23 @@ def test_cli_serve_alerts(spark, tmp_path):
         assert a <= r["episode_start"] <= r["episode_end"] < b
         assert r["n_buckets"] >= 1 and r["peak_value"] >= 1
     assert len(out["rows"]) == len(langs)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        main(["serve-alerts", "--warehouse", wh, "--t0", str(a),
-              "--t1", str(b), "--grain", "1h", "--keys", "lang",
-              "--hi", str(10**9), "--lo", "0"])
-    out2 = json.loads(buf.getvalue().strip().splitlines()[-1])
+    out2 = _cli(["serve-alerts", "--warehouse", wh, "--t0", str(a),
+                 "--t1", str(b), "--grain", "1h", "--keys", "lang",
+                 "--hi", str(10**9), "--lo", "0"])
     assert out2["rows"] == []
 
 
-def test_cli_serve_contribution(spark, tmp_path):
+def test_cli_serve_contribution(spark, cli_wh):
     """serve-contribution: per-key delta + share of the total move
     between two disjoint routed ranges, ranked by |delta|."""
-    import io
-    import json
-    from contextlib import redirect_stdout
-
-    import pytest
-    from pyspark.sql import functions as F
-
     from chainalytic_framework_spark.__main__ import main
 
-    pages_out = str(tmp_path / "pages")
-    wh = str(tmp_path / "wh")
-    main(["synth", "--rows", "2000", "--out", pages_out])
-    main(["run", "--input", pages_out, "--warehouse", wh, "--snapshot-id", "s1"])
-    store = TableStore(spark, wh)
-    t1m = store.read("tier_1m")
-    lo = t1m.agg(F.min(F.col("bucket_start").cast("long"))).first()[0]
-    hi = t1m.agg(F.max(F.col("bucket_start").cast("long"))).first()[0] + 60
-    a = -(-lo // 3600) * 3600
-    b = (hi // 3600) * 3600
+    wh, a, b = cli_wh.wh, cli_wh.a, cli_wh.b
     mid = a + ((b - a) // 2 // 3600) * 3600
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        main(["serve-contribution", "--warehouse", wh,
-              "--a0", str(a), "--a1", str(mid),
-              "--b0", str(mid), "--b1", str(b),
-              "--grain", "1h", "--keys", "lang"])
-    out = json.loads(buf.getvalue().strip().splitlines()[-1])
+    out = _cli(["serve-contribution", "--warehouse", wh,
+                "--a0", str(a), "--a1", str(mid),
+                "--b0", str(mid), "--b1", str(b),
+                "--grain", "1h", "--keys", "lang"])
     assert out["rows"], "expected at least one lang row"
     total = out["rows"][0]["total_delta"]
     assert sum(r["delta"] for r in out["rows"]) == total
@@ -692,3 +582,369 @@ def test_cli_serve_contribution(spark, tmp_path):
               "--a0", str(a), "--a1", str(b),
               "--b0", str(mid), "--b1", str(b),
               "--grain", "1h", "--keys", "lang"])
+
+
+def _stored(store, family):
+    """``{tier: DataFrame}`` of the stored ``<family>_<tier>`` tables."""
+    from chainalytic_framework_spark.operators.bucketing import TIER_ORDER
+
+    return {t: store.read(f"{family}_{t}") for t in TIER_ORDER
+            if store.exists(f"{family}_{t}")}
+
+
+def test_cli_serve_range_matches_read_routed(spark, cli_wh):
+    """serve-range prints exactly ``read_routed`` over the stored tiers;
+    several comma-separated measures come back from one read."""
+    from chainalytic_framework_spark.operators.router import read_routed
+
+    out = _cli(["serve-range", "--warehouse", cli_wh.wh, "--t0", str(cli_wh.a),
+                "--t1", str(cli_wh.b), "--keys", "lang",
+                "--measure", "point_count,byte_size", "--limit", "1000"])
+    assert (out["t0"], out["t1"], out["measure"]) == (
+        cli_wh.a, cli_wh.b, "point_count,byte_size")
+    want = read_routed(_stored(TableStore(spark, cli_wh.wh), "tier"),
+                       cli_wh.a, cli_wh.b, measure=("point_count", "byte_size"),
+                       keys=("lang",))
+    key = lambda r: r["lang"]  # noqa: E731
+    assert out["rows"] and sorted(out["rows"], key=key) == sorted(
+        _json_rows(want.collect()), key=key)
+
+
+def test_cli_serve_quantile_matches_read_routed_quantile(spark, cli_wh):
+    """serve-quantile prints exactly ``read_routed_quantile`` over the
+    stored histogram tiers."""
+    from chainalytic_framework_spark.operators.router import read_routed_quantile
+
+    out = _cli(["serve-quantile", "--warehouse", cli_wh.wh, "--t0", str(cli_wh.a),
+                "--t1", str(cli_wh.b), "--q", "75", "--limit", "1000"])
+    assert (out["t0"], out["t1"], out["q"]) == (cli_wh.a, cli_wh.b, 75)
+    want = read_routed_quantile(_stored(TableStore(spark, cli_wh.wh), "hist"),
+                                cli_wh.a, cli_wh.b, series_cols=("lang",),
+                                q_x100=75, out_col="q_lo")
+    key = lambda r: r["lang"]  # noqa: E731
+    assert out["rows"] and sorted(out["rows"], key=key) == sorted(
+        _json_rows(want.collect()), key=key)
+
+
+def test_cli_forecast_matches_holt_forecast(spark, cli_wh):
+    """forecast --zero-fill prints ``holt_forecast`` over the stored tier
+    collapsed to the key grain and zero-filled, ordered by (keys, step)."""
+    from chainalytic_framework_spark.__main__ import _zero_fill_spine
+    from chainalytic_framework_spark.operators.forecast import holt_forecast
+
+    out = _cli(["forecast", "--warehouse", cli_wh.wh, "--tier", "1h",
+                "--keys", "lang", "--horizon", "3", "--zero-fill",
+                "--limit", "1000"])
+    assert (out["tier"], out["measure"], out["horizon"]) == ("1h", "point_count", 3)
+    tier = _zero_fill_spine(
+        TableStore(spark, cli_wh.wh).read("tier_1h")
+        .groupBy("lang", "bucket_start")
+        .agg(F.sum("point_count").alias("point_count")),
+        ["lang"], "point_count", "1h",
+    )
+    want = holt_forecast(tier, key_cols=("lang",), value_col="point_count",
+                         alpha=0.5, beta=0.1, gamma=None, period=None, horizon=3)
+    assert out["rows"] and out["rows"] == _json_rows(
+        want.orderBy("lang", "step").limit(1000).collect())
+
+
+def test_cli_flag_defaults_snapshot():
+    """Every subcommand keeps its flags, defaults, required-ness and
+    types: ``{command: {dest: [default, required, type]}}``."""
+    import argparse
+    from unittest import mock
+
+    from chainalytic_framework_spark.__main__ import main
+
+    class Built(Exception):
+        pass
+
+    def capture(self, *a, **k):
+        raise Built(self)
+
+    with mock.patch.object(argparse.ArgumentParser, "parse_args", capture):
+        with pytest.raises(Built) as got:
+            main([])
+    sub = next(a for a in got.value.args[0]._actions
+               if isinstance(a, argparse._SubParsersAction))
+    snap = {
+        name: {a.dest: [a.default, a.required,
+                        getattr(a.type, "__name__", None)]
+               for a in sp._actions if a.dest != "help"}
+        for name, sp in sub.choices.items()
+    }
+    assert snap == CLI_FLAGS
+
+
+CLI_FLAGS = {
+    "run": {
+        "input": [None, True, None], "warehouse": [None, True, None],
+        "metric_set": ["default", False, None], "snapshot_id": ["", False, None],
+        "no_fold": [False, False, None], "with_sketches": [False, False, None],
+        "with_histograms": [False, False, None],
+        "with_cold_tier": [False, False, None], "retention_now": [None, False, None],
+    },
+    "synth": {
+        "rows": [None, True, "int"], "out": [None, True, None],
+        "seed": [42, False, "int"],
+    },
+    "compact": {
+        "warehouse": [None, True, None], "table": [None, True, None],
+        "partition_by": ["bucket_day", False, None], "max_files": [4, False, "int"],
+        "target_bytes": [134217728, False, "int"],
+    },
+    "query": {
+        "name": [None, True, None], "sf_dir": ["/root/testdata/sf0.01", False, None],
+        "out": [None, False, None], "limit": [20, False, "int"],
+    },
+    "serve-range": {
+        "warehouse": [None, True, None], "t0": [None, True, "int"],
+        "t1": [None, True, "int"], "measure": ["point_count", False, None],
+        "keys": ["url", False, None], "limit": [50, False, "int"],
+        "retention_now": [None, False, None],
+    },
+    "serve-quantile": {
+        "warehouse": [None, True, None], "t0": [None, True, "int"],
+        "t1": [None, True, "int"], "q": [90, False, "int"],
+        "keys": ["lang", False, None], "limit": [50, False, "int"],
+        "retention_now": [None, False, None],
+    },
+    "stream": {
+        "input": [None, True, None], "warehouse": [None, True, None],
+        "checkpoint": [None, True, None], "with_sketches": [False, False, None],
+        "with_histograms": [False, False, None],
+        "with_heavyhitters": [False, False, None],
+        "compact_closed": [False, False, None],
+    },
+    "forecast": {
+        "warehouse": [None, True, None], "tier": ["1h", False, None],
+        "measure": ["point_count", False, None], "keys": ["lang", False, None],
+        "horizon": [12, False, "int"], "alpha": [0.5, False, "float"],
+        "beta": [0.1, False, "float"], "gamma": [None, False, "float"],
+        "period": [None, False, "int"], "gapfill": [False, False, None],
+        "zero_fill": [False, False, None], "limit": [50, False, "int"],
+    },
+    "serve-forecast": {
+        "warehouse": [None, True, None], "t0": [None, True, "int"],
+        "t1": [None, True, "int"], "grain": ["1h", False, None],
+        "measure": ["point_count", False, None], "keys": ["lang", False, None],
+        "horizon": [12, False, "int"], "alpha": [0.5, False, "float"],
+        "beta": [0.1, False, "float"], "gamma": [None, False, "float"],
+        "period": [None, False, "int"], "zero_fill": [False, False, None],
+        "retention_now": [None, False, None], "limit": [50, False, "int"],
+    },
+    "cold": {
+        "warehouse": [None, True, None], "tier": ["1d", False, None],
+        "before": [None, True, None],
+    },
+    "serve-chart": {
+        "warehouse": [None, True, None], "t0": [None, True, "int"],
+        "t1": [None, True, "int"], "grain": ["1h", False, None],
+        "measure": ["point_count", False, None], "keys": ["lang", False, None],
+        "npoints": [200, False, "int"], "method": ["lttb", False, None],
+        "retention_now": [None, False, None], "limit": [1000, False, "int"],
+    },
+    "crawl-plan": {
+        "warehouse": [None, True, None], "gap": [600, False, "int"],
+        "min_interval": [3600, False, "int"], "max_interval": [2592000, False, "int"],
+        "budget": [None, False, "int"], "limit": [100, False, "int"],
+    },
+    "serve-trending": {
+        "warehouse": [None, True, None], "t0": [None, True, "int"],
+        "t1": [None, True, "int"], "grain": ["1h", False, None],
+        "measure": ["point_count", False, None], "keys": ["lang", False, None],
+        "half_life": [86400, False, "int"], "k": [20, False, "int"],
+        "retention_now": [None, False, None],
+    },
+    "serve-sax": {
+        "warehouse": [None, True, None], "t0": [None, True, "int"],
+        "t1": [None, True, "int"], "grain": ["1h", False, None],
+        "measure": ["point_count", False, None], "keys": ["url", False, None],
+        "segments": [8, False, "int"], "alphabet": [4, False, "int"],
+        "like": [None, False, None], "retention_now": [None, False, None],
+        "limit": [100, False, "int"],
+    },
+    "serve-trend": {
+        "warehouse": [None, True, None], "t0": [None, True, "int"],
+        "t1": [None, True, "int"], "grain": ["1h", False, None],
+        "measure": ["point_count", False, None], "keys": ["lang", False, None],
+        "retention_now": [None, False, None], "limit": [100, False, "int"],
+        "movers": [False, False, None], "robust": [False, False, None],
+    },
+    "serve-alerts": {
+        "warehouse": [None, True, None], "t0": [None, True, "int"],
+        "t1": [None, True, "int"], "grain": ["1h", False, None],
+        "measure": ["point_count", False, None], "keys": ["lang", False, None],
+        "hi": [None, True, "int"], "lo": [None, True, "int"],
+        "retention_now": [None, False, None], "limit": [1000, False, "int"],
+    },
+    "serve-coverage": {
+        "warehouse": [None, True, None], "grain": ["1m", False, None],
+        "keys": ["lang", False, None], "t0": [None, False, "int"],
+        "t1": [None, False, "int"], "limit": [100, False, "int"],
+    },
+    "serve-drift": {
+        "warehouse": [None, True, None], "a0": [None, True, "int"],
+        "a1": [None, True, "int"], "b0": [None, True, "int"],
+        "b1": [None, True, "int"], "keys": ["lang", False, None],
+        "retention_now": [None, False, None], "limit": [100, False, "int"],
+    },
+    "serve-contribution": {
+        "warehouse": [None, True, None], "a0": [None, True, "int"],
+        "a1": [None, True, "int"], "b0": [None, True, "int"],
+        "b1": [None, True, "int"], "grain": ["1h", False, None],
+        "measure": ["point_count", False, None], "keys": ["lang", False, None],
+        "retention_now": [None, False, None], "limit": [100, False, "int"],
+    },
+    "serve-distinct": {
+        "warehouse": [None, True, None], "t0": [None, True, "int"],
+        "t1": [None, True, "int"], "keys": ["lang", False, None],
+        "retention_now": [None, False, None], "limit": [100, False, "int"],
+    },
+}
+
+
+def test_cli_serve_without_family_exits_2(tmp_path):
+    """serve-range, serve-distinct and serve-coverage on a warehouse that
+    holds none of their family's tables print {"error": ...} and exit 2."""
+    import io
+    import json
+    from contextlib import redirect_stdout
+
+    from chainalytic_framework_spark.__main__ import main
+
+    wh = str(tmp_path / "wh")
+    for argv in (["serve-range", "--t0", "0", "--t1", "86400"],
+                 ["serve-distinct", "--t0", "0", "--t1", "86400"],
+                 ["serve-coverage"]):
+        buf = io.StringIO()
+        with redirect_stdout(buf), pytest.raises(SystemExit) as ex:
+            main([argv[0], "--warehouse", wh, *argv[1:]])
+        assert ex.value.code == 2, argv
+        assert "error" in json.loads(buf.getvalue().strip().splitlines()[-1]), argv
+
+
+@pytest.fixture(scope="module")
+def edge_wh(spark, tmp_path_factory):
+    """A warehouse whose last day is only in the stream logs: ``run
+    --with-histograms --with-sketches`` over the earlier days, then
+    ``stream --with-sketches --with-histograms`` (no compaction) over
+    the last day. ``a``..``b`` spans the batch days plus the first 59
+    minutes of the stream day, so every routed cover reads the edge in
+    its 1m segments."""
+    from types import SimpleNamespace
+
+    from chainalytic_framework_spark.__main__ import main
+
+    base = tmp_path_factory.mktemp("edge_wh")
+    wh = str(base / "wh")
+    pages = generate_pages(spark, 3000).cache()
+    last = pages.agg(F.max(F.to_date("warc_ts"))).first()[0]
+    pages.where(F.to_date("warc_ts") < F.lit(last)).write.parquet(str(base / "hist"))
+    pages.where(F.to_date("warc_ts") >= F.lit(last)).write.parquet(str(base / "edge"))
+    main(["run", "--input", str(base / "hist"), "--warehouse", wh,
+          "--snapshot-id", "s1", "--with-histograms", "--with-sketches"])
+    main(["stream", "--input", str(base / "edge"), "--warehouse", wh,
+          "--checkpoint", str(base / "ckpt"), "--with-sketches",
+          "--with-histograms"])
+    a = pages.agg(F.min(F.col("warc_ts").cast("long"))).first()[0] // 86400 * 86400
+    b = int(dt.datetime.combine(last, dt.time()).replace(
+        tzinfo=dt.timezone.utc).timestamp()) + 59 * 60
+    return SimpleNamespace(wh=wh, pages=pages, a=a, b=b)
+
+
+def _in_range(pages, a, b):
+    t = F.col("warc_ts").cast("long")
+    return pages.where((t >= a) & (t < b))
+
+
+def test_cli_serve_range_with_stream_edge(spark, edge_wh):
+    """serve-range over batch history plus the stream's 1m edge equals
+    the 1m rollup of every page in range."""
+    from chainalytic_framework_spark.operators.fold import prepare_observations
+    from chainalytic_framework_spark.operators.registry import (
+        DEFAULT_SET,
+        rollup_with_spec,
+    )
+    from chainalytic_framework_spark.operators.router import read_routed
+
+    out = _cli(["serve-range", "--warehouse", edge_wh.wh, "--t0", str(edge_wh.a),
+                "--t1", str(edge_wh.b), "--keys", "lang", "--limit", "1000"])
+    full = rollup_with_spec(prepare_observations(edge_wh.pages), DEFAULT_SET, "1m")
+    want = read_routed({"1m": full}, edge_wh.a, edge_wh.b, keys=("lang",))
+    key = lambda r: r["lang"]  # noqa: E731
+    assert out["rows"] and sorted(out["rows"], key=key) == sorted(
+        _json_rows(want.collect()), key=key)
+    edge_only = _in_range(edge_wh.pages, edge_wh.b - 59 * 60, edge_wh.b)
+    assert edge_only.count() > 0  # the range does reach into the edge
+
+
+def test_cli_serve_quantile_with_stream_edge(spark, edge_wh):
+    """serve-quantile over batch histogram tiers plus the stream's
+    histogram edge equals the quantile of a histogram of every page in
+    range (counts are exact, so the answer is too)."""
+    from chainalytic_framework_spark.operators.histogram import histogram_rollup
+    from chainalytic_framework_spark.operators.router import read_routed_quantile
+
+    out = _cli(["serve-quantile", "--warehouse", edge_wh.wh, "--t0", str(edge_wh.a),
+                "--t1", str(edge_wh.b), "--q", "90", "--limit", "1000"])
+    be = (F.col("warc_ts").cast("long") / 60).cast("long") * 60
+    full = histogram_rollup(edge_wh.pages, be, ["lang"], F.length("text").cast("long"))
+    want = read_routed_quantile({"1m": full}, edge_wh.a, edge_wh.b,
+                                series_cols=("lang",), q_x100=90, out_col="q_lo")
+    key = lambda r: r["lang"]  # noqa: E731
+    assert out["rows"] and sorted(out["rows"], key=key) == sorted(
+        _json_rows(want.collect()), key=key)
+
+
+def test_cli_serve_distinct_with_stream_edge(spark, edge_wh):
+    """serve-distinct over batch sketch tiers plus the stream's sketch
+    edge estimates every lang's distinct urls in range within the HLL
+    bound."""
+    out = _cli(["serve-distinct", "--warehouse", edge_wh.wh, "--t0", str(edge_wh.a),
+                "--t1", str(edge_wh.b), "--limit", "1000"])
+    exact = {r["lang"]: r["d"] for r in _in_range(edge_wh.pages, edge_wh.a, edge_wh.b)
+             .groupBy("lang").agg(F.countDistinct("url").alias("d")).collect()}
+    got = {r["lang"]: r["distinct_est"] for r in out["rows"]}
+    assert set(got) == set(exact) and got
+    for lang, d in exact.items():
+        assert abs(got[lang] - d) / d < 0.06, (lang, got[lang], d)
+
+
+def test_cli_stream_compacts_closed_days(spark, tmp_path):
+    """stream --with-histograms --compact-closed: every day before the
+    stream's last day moves into tier_1m and hist_1m, equal to the batch
+    rollups of those days' pages; the last day stays in the logs."""
+    from chainalytic_framework_spark.operators.fold import prepare_observations
+    from chainalytic_framework_spark.operators.histogram import histogram_rollup
+    from chainalytic_framework_spark.operators.registry import (
+        DEFAULT_SET,
+        rollup_with_spec,
+    )
+
+    pages = generate_pages(spark, 2000).cache()
+    src = str(tmp_path / "pages")
+    pages.write.parquet(src)
+    wh = str(tmp_path / "wh")
+    out = _cli(["stream", "--input", src, "--warehouse", wh,
+                "--checkpoint", str(tmp_path / "ckpt"), "--with-histograms",
+                "--compact-closed"])
+    days = sorted({str(d) for d in pages.select(F.to_date("warc_ts"))
+                   .distinct().toPandas().iloc[:, 0]})
+    assert out["drained"] is True
+    assert sorted(out["compacted_tier_days"]) == days[:-1]
+    assert sorted(out["compacted_hist_days"]) == days[:-1]
+
+    store = TableStore(spark, wh)
+    closed = pages.where(F.to_date("warc_ts") < F.lit(days[-1]))
+    got = store.read("tier_1m").drop("bucket_day", "url_bucket")
+    want = rollup_with_spec(prepare_observations(closed), DEFAULT_SET, "1m").select(got.columns)
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    cols = ["lang", "bucket_epoch", "hb_lo", "hb_count"]
+    be = (F.col("warc_ts").cast("long") / 60).cast("long") * 60
+    hgot = store.read("hist_1m").select(cols)
+    hwant = histogram_rollup(closed, be, ["lang"], F.length("text").cast("long")).select(cols)
+    assert hgot.exceptAll(hwant).isEmpty() and hwant.exceptAll(hgot).isEmpty()
+    for log in ("tier_1m_stream", "hist_1m_stream"):
+        left = {str(r[0]) for r in store.read(log).select("bucket_day").distinct().collect()}
+        assert left == {days[-1]}

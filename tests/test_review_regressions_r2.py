@@ -109,7 +109,7 @@ def test_metric_sets_use_namespaced_tier_tables(spark, tmp_path):
 def test_compact_stream_preserves_lang_variants(spark, tmp_path):
     """Stream/batch conflict is the FULL tier grain: a batch row with a
     different lang for the same (bucket, url_hash) must survive."""
-    from chainalytic_framework_spark.streaming.stream import compact_stream_into_batch
+    from chainalytic_framework_spark.streaming.stream import compact_edge
 
     store = _store(spark, tmp_path)
     cols = "bucket_start timestamp, url_hash long, url string, lang string, point_count long, bucket_day date"
@@ -122,14 +122,14 @@ def test_compact_stream_preserves_lang_variants(spark, tmp_path):
     )
     store.write(batch, "tier_1m", partition_by=["bucket_day"])
     store.write(stream, "tier_1m_stream", partition_by=["bucket_day"])
-    days = compact_stream_into_batch(store)
+    days = compact_edge(store, "tier")
     assert days and str(days[0]) == "2024-01-01"
     got = {(r["lang"], r["point_count"]) for r in store.read("tier_1m").collect()}
     assert got == {("fr", 3), ("en", 5)}
 
 
 def test_compact_stream_closed_before_keeps_open_day(spark, tmp_path):
-    from chainalytic_framework_spark.streaming.stream import compact_stream_into_batch
+    from chainalytic_framework_spark.streaming.stream import compact_edge
 
     store = _store(spark, tmp_path)
     cols = "bucket_start timestamp, url_hash long, url string, lang string, point_count long, bucket_day date"
@@ -139,7 +139,7 @@ def test_compact_stream_closed_before_keeps_open_day(spark, tmp_path):
     ]
     store.write(spark.createDataFrame(rows, cols), "tier_1m_stream",
                 partition_by=["bucket_day"])
-    days = compact_stream_into_batch(store, closed_before=dt.date(2024, 1, 2))
+    days = compact_edge(store, "tier", closed_before=dt.date(2024, 1, 2))
     assert [str(d) for d in days] == ["2024-01-01"]
     left = {str(r["bucket_day"]) for r in store.read("tier_1m_stream").collect()}
     assert left == {"2024-01-02"}  # the open day stayed

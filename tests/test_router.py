@@ -48,6 +48,23 @@ def test_route_range_rejects_unaligned():
         route_range(30, 3600)
 
 
+def test_routed_read_without_frames_raises_value_error():
+    """A family with no stored tier is a ValueError for every routed
+    read, not a KeyError on a tier the cover assumed (Spark-free: the
+    cover fails before any frame is touched)."""
+    from chainalytic_framework_spark.operators.router import (
+        _routed,
+        read_routed_distinct,
+        read_routed_quantile,
+    )
+
+    with pytest.raises(ValueError, match="no stored tier"):
+        _routed({}, 0, 86400, lambda df: df, None, None)
+    for read in (read_routed, read_routed_distinct, read_routed_quantile):
+        with pytest.raises(ValueError, match="no stored tier"):
+            read({}, 0, 86400)
+
+
 @pytest.fixture(scope="module")
 def tiers(spark, pages):
     # lang grain: DENSE series (few keys, every bucket populated) — the

@@ -73,7 +73,7 @@ def test_stream_compacted_into_pipeline_tier_stays_readable(spark, tmp_path, fir
     import datetime as dt
 
     from chainalytic_framework_spark.plans.pipeline import run_pipeline
-    from chainalytic_framework_spark.streaming.stream import compact_stream_into_batch
+    from chainalytic_framework_spark.streaming.stream import compact_edge
 
     pages = generate_pages(spark, 2000).cache()
     d0 = pages.agg(F.min(F.to_date("warc_ts"))).first()[0]
@@ -102,7 +102,7 @@ def test_stream_compacted_into_pipeline_tier_stays_readable(spark, tmp_path, fir
         trigger_available_now=True,
     )
     q.awaitTermination(300)
-    assert compact_stream_into_batch(store) == [d0]
+    assert compact_edge(store, "tier") == [d0]
     if first == "stream":
         run_pipeline(spark, batch_pages, store, with_fold=False)
 
@@ -158,7 +158,7 @@ def test_compact_stream_into_batch_matches_batch_rollup(spark, tmp_path):
     """Drain a stream, compact into tier_1m: the compacted region must
     equal the batch rollup of the same input, and the stream table must
     be empty afterwards (handoff complete)."""
-    from chainalytic_framework_spark.streaming.stream import compact_stream_into_batch
+    from chainalytic_framework_spark.streaming.stream import compact_edge
 
     pages = generate_pages(spark, 2000)
     src = str(tmp_path / "pages_src")
@@ -169,7 +169,7 @@ def test_compact_stream_into_batch_matches_batch_rollup(spark, tmp_path):
     )
     q.awaitTermination(300)
 
-    days = compact_stream_into_batch(store)
+    days = compact_edge(store, "tier")
     assert days
     assert not store.exists("tier_1m_stream")  # partitions dropped
 
@@ -187,7 +187,7 @@ def test_compact_stream_into_batch_matches_batch_rollup(spark, tmp_path):
     assert exp.exceptAll(got).count() == 0
 
     # idempotent: compacting again is a no-op
-    assert compact_stream_into_batch(store) == []
+    assert compact_edge(store, "tier") == []
 
 
 def test_stream_histogram_partials_match_batch(spark, tmp_path):
@@ -246,7 +246,7 @@ def test_serve_distribution_history_plus_edge(spark, tmp_path):
     from chainalytic_framework_spark.operators.histogram import histogram_rollup
     from chainalytic_framework_spark.plans.pipeline import run_pipeline
     from chainalytic_framework_spark.streaming.stream import (
-        serve_distribution,
+        serve_frames,
         start_histogram_stream_to_store,
     )
 
@@ -270,7 +270,7 @@ def test_serve_distribution_history_plus_edge(spark, tmp_path):
         (pages.agg(F.max("warc_ts")).first()[0] - dt.timedelta(minutes=11)).timestamp()
     )
     got = (
-        serve_distribution(store)
+        serve_frames(store, "hist")["1m"]
         .where(F.col("bucket_epoch") < horizon)
         .groupBy("lang", "bucket_epoch", "hb_lo")
         .agg(F.sum("hb_count").alias("hb_count"))
@@ -314,7 +314,7 @@ def test_replay_double_append_is_deduped(spark, tmp_path):
     rows must not change (a) compacted tier contents, (b) merged
     histogram counts — both reads dedupe deterministic duplicates."""
     from chainalytic_framework_spark.streaming.stream import (
-        compact_stream_into_batch,
+        compact_edge,
         start_histogram_stream_to_store,
         stream_histogram_counts,
     )
@@ -353,7 +353,7 @@ def test_replay_double_append_is_deduped(spark, tmp_path):
     }
     assert hist_after == hist_before
 
-    days = compact_stream_into_batch(store)
+    days = compact_edge(store, "tier")
     assert days
     batch = store.read("tier_1m").drop("bucket_day", "url_bucket")
     # every (bucket, url, lang) appears exactly once after compaction
@@ -367,11 +367,11 @@ def test_replay_double_append_is_deduped(spark, tmp_path):
 def test_compact_hist_stream_into_batch(spark, tmp_path):
     """Closed stream-histogram days fold into hist_1m exactly (vs batch
     histogram_rollup), survive replay duplicates, and compaction is
-    idempotent; serve_distribution keeps working afterward."""
+    idempotent; the merged history+edge read keeps working afterward."""
     from chainalytic_framework_spark.operators.histogram import histogram_rollup
     from chainalytic_framework_spark.streaming.stream import (
-        compact_hist_stream_into_batch,
-        serve_distribution,
+        compact_edge,
+        serve_frames,
         start_histogram_stream_to_store,
     )
 
@@ -390,7 +390,7 @@ def test_compact_hist_stream_into_batch(spark, tmp_path):
 
     last_day = store.read("hist_1m_stream").agg(
         F.max("bucket_day")).first()[0]
-    days = compact_hist_stream_into_batch(store, closed_before=last_day)
+    days = compact_edge(store, "hist", closed_before=last_day)
     assert days and last_day not in days
 
     be = (F.col("warc_ts").cast("long") / 60).cast("long") * 60
@@ -407,12 +407,13 @@ def test_compact_hist_stream_into_batch(spark, tmp_path):
     # same horizon is a no-op; the merged read still serves
     assert store.read("hist_1m_stream").where(
         F.col("bucket_day").isin(days)).count() == 0
-    assert compact_hist_stream_into_batch(store, closed_before=last_day) == []
-    assert serve_distribution(store).count() > 0
+    assert compact_edge(store, "hist", closed_before=last_day) == []
+    assert serve_frames(store, "hist")["1m"].count() > 0
 
 
 def test_prune_sketch_stream(spark, tmp_path):
     from chainalytic_framework_spark.streaming.stream import (
+        compact_edge,
         prune_sketch_stream,
         stream_sketch_estimate,
     )
@@ -437,6 +438,8 @@ def test_prune_sketch_stream(spark, tmp_path):
                  store.read("sketch_1m_stream").select("bucket_day").distinct().collect()}
     assert remaining == {all_days[-1]}
     assert stream_sketch_estimate(store).count() > 0  # still serves the edge
+    with pytest.raises(ValueError, match="pruned"):  # sketches are not compacted
+        compact_edge(store, "sketch")
 
 
 def test_stream_heavy_hitters_match_batch(spark, tmp_path):
@@ -493,7 +496,7 @@ def test_serve_distribution_ingest_gap_and_empty_batch(spark, tmp_path):
     drop it on a null high-water."""
     import datetime as dt
 
-    from chainalytic_framework_spark.streaming.stream import serve_distribution
+    from chainalytic_framework_spark.streaming.stream import serve_frames
 
     schema = ("lang string, bucket_epoch long, hb_lo long, hb_count long, "
               "bucket_day date")
@@ -510,7 +513,7 @@ def test_serve_distribution_ingest_gap_and_empty_batch(spark, tmp_path):
                  partition_by=["bucket_day"])
 
     got = {(r["bucket_epoch"], r["hb_count"])
-           for r in serve_distribution(store).collect()}
+           for r in serve_frames(store, "hist")["1m"].collect()}
     # 60/180 from batch (overlap partial at 180 discarded), 120 and 240
     # from the stream
     assert got == {(60, 5), (180, 7), (120, 3), (240, 4)}
@@ -522,19 +525,19 @@ def test_serve_distribution_ingest_gap_and_empty_batch(spark, tmp_path):
     store2.append(spark.createDataFrame(stream_rows, schema), "hist_1m_stream",
                   partition_by=["bucket_day"])
     got2 = {(r["bucket_epoch"], r["hb_count"])
-            for r in serve_distribution(store2).collect()}
+            for r in serve_frames(store2, "hist")["1m"].collect()}
     assert got2 == {(120, 3), (240, 4), (180, 999)}
 
 
 def test_serve_tier_history_plus_edge(spark, tmp_path):
-    """Numeric-tier twin of serve_distribution: batch days + stream edge
+    """Numeric tier family through serve_frames: batch days + stream edge
     merge into the full-corpus 1m rollup over the finalized region, with
     per-bucket batch-wins (no double count, ingest gaps covered)."""
     import datetime as dt
 
     from chainalytic_framework_spark.plans.pipeline import run_pipeline
     from chainalytic_framework_spark.streaming.stream import (
-        serve_tier,
+        serve_frames,
         start_stream_to_store,
     )
 
@@ -556,8 +559,10 @@ def test_serve_tier_history_plus_edge(spark, tmp_path):
     horizon = int(
         (pages.agg(F.max("warc_ts")).first()[0] - dt.timedelta(minutes=11)).timestamp()
     )
+    frames = serve_frames(store, "tier")
+    assert set(frames) == {"1m", "1h", "1d", "30d"}  # every stored tier
     got = (
-        serve_tier(store, "1m")
+        frames["1m"]
         .where(F.col("bucket_start").cast("long") < horizon)
         .groupBy("url", "bucket_start")
         .agg(F.sum("point_count").alias("pc"), F.sum("byte_size").alias("bs"))
@@ -579,14 +584,15 @@ def test_serve_tier_history_plus_edge(spark, tmp_path):
 
 
 def test_serve_distinct_history_plus_edge(spark, tmp_path):
-    """Sketch twin of serve_tier: batch sketch days + streaming sketch
+    """Sketch family through serve_frames: batch sketch days + streaming sketch
     edge estimate the full-corpus per-bucket distinct urls within HLL
     error, with per-bucket batch-wins."""
     import datetime as dt
 
+    from chainalytic_framework_spark.operators.sketches import with_estimate
     from chainalytic_framework_spark.plans.pipeline import run_pipeline
     from chainalytic_framework_spark.streaming.stream import (
-        serve_distinct,
+        serve_frames,
         start_stream_to_store,
     )
 
@@ -609,7 +615,7 @@ def test_serve_distinct_history_plus_edge(spark, tmp_path):
         (pages.agg(F.max("warc_ts")).first()[0] - dt.timedelta(minutes=11)).timestamp()
     )
     got = {(r["bucket_start"], r["lang"]): r["distinct_urls_est"]
-           for r in serve_distinct(store)
+           for r in with_estimate(serve_frames(store, "sketch")["1m"])
            .where(F.col("bucket_start").cast("long") < horizon).collect()}
     exact = {(r["bucket_start"], r["lang"]): r["d"]
              for r in pages
